@@ -3,16 +3,10 @@
 The reference's signature architecture: KMeans/GM partitions the
 feature space; per-cluster RandomForests score within partitions;
 small/pure clusters short-circuit to a hard label via the
-cluster-split rule (README.md:1595-1613). Two training paths:
-
-- ``train_cluster_models``: the reference's driver loop (one Spark job
-  per cluster) — fine for k<=8, exact parity;
-- ``train_cluster_models_grouped``: ``applyInPandas`` grouped training
-  (one shuffle, clusters trained in parallel inside Arrow batches,
-  sklearn-free: pure numpy forest-free fallback is NOT attempted —
-  instead this path trains one Spark RF per cluster *concurrently*
-  via a thread pool, which is the idiomatic Spark scale fix for
-  "driver for-loop fits" at moderate k).
+cluster-split rule (README.md:1595-1613). ``train_cluster_models``
+fits one Spark pipeline per modeled cluster; with more than one such
+cluster the fits run concurrently on a thread pool, which replaces the
+reference's serial driver loop while the data stays distributed.
 
 Probability remap (D5): the reference reads the per-cluster
 StringIndexer's majority label to decide which probability-vector slot
@@ -134,18 +128,16 @@ def train_cluster_models(
     make_classifier,
     cluster_col: str = "cluster",
     label_col: str = "labels2",
-    parallel: bool = True,
 ) -> dict[int, PipelineModel]:
-    """Fit one pipeline per modeled cluster. ``parallel=True`` runs the
-    fits on a thread pool (independent Spark jobs scheduled
+    """Fit one pipeline per modeled cluster. With more than one, the
+    fits run on a thread pool (independent Spark jobs scheduled
     concurrently — removes the serial-loop bottleneck the reference
-    hits at 234 s / 6 clusters, README.md:1698-1704) — the data stays
-    distributed either way."""
+    hits at 234 s / 6 clusters, README.md:1698-1704)."""
     def fit(k: int) -> tuple[int, PipelineModel]:
         sub = df.filter(F.col(cluster_col) == k)
         return k, make_cluster_pipeline(make_classifier(), label_col).fit(sub)
 
-    if parallel and len(split.modeled) > 1:
+    if len(split.modeled) > 1:
         with ThreadPoolExecutor(max_workers=min(8, len(split.modeled))) as ex:
             return dict(ex.map(fit, split.modeled))
     return dict(fit(k) for k in split.modeled)
