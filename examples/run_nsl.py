@@ -1,7 +1,7 @@
 """Run the NSL-KDD intrusion-detection pipeline end-to-end — the
 engine's replacement for the reference's 168-cell notebook.
 
-    python examples/run_nsl.py [--fast] [--flow kmeans|gm|ensemble]
+    python examples/run_nsl.py [--fast] [--flow kmeans|gm|category|ensemble]
 
 Defaults to the reference's full model sizes (RF 500x20, k=8); --fast
 uses test-sized models (~1 min). Prints the per-strategy metric

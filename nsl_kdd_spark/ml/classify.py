@@ -16,7 +16,7 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nsl_kdd_spark.ml.cluster import DEFAULT_SEED
+DEFAULT_SEED = 4667979835606274383  # the reference's fixed seed (README.md:1387)
 
 
 def make_rf(
@@ -50,9 +50,11 @@ def train_binary_classifier(
 def attack_probability(
     model: PipelineModel, df: DataFrame, prob_col: str, id_col: str = "id"
 ) -> DataFrame:
-    """(id, prob-of-attack) from a fitted binary pipeline: slot chosen
-    by the indexer's label order (vector_to_array, replacing the
-    reference's rdd row[1] extraction — README.md:2245, R3)."""
+    """(id, prob-of-attack) from any fitted [StringIndexer, ...,
+    classifier] pipeline (per-category RF, per-cluster RF, stacker,
+    ensembler): slot chosen by the indexer's label order
+    (vector_to_array, replacing the reference's rdd row[1] extraction —
+    README.md:2245, R3; the D5 remap, README.md:1679-1680)."""
     indexer = model.stages[0]
     slot = list(indexer.labels).index("attack") if "attack" in indexer.labels else 1
     return model.transform(df).select(
@@ -105,13 +107,3 @@ def train_rf_ensembler(
     )
     return Pipeline(stages=[indexer, assembler, rf]).fit(df)
 
-
-def stacker_probability(
-    model: PipelineModel, df: DataFrame, prob_col: str, id_col: str = "id"
-) -> DataFrame:
-    """(id, prob) from a fitted stacker/ensembler pipeline."""
-    indexer = model.stages[0]
-    slot = list(indexer.labels).index("attack") if "attack" in indexer.labels else 1
-    return model.transform(df).select(
-        F.col(id_col), vector_to_array(F.col("probability"))[slot].alias(prob_col)
-    )

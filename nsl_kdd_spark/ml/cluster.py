@@ -4,13 +4,14 @@ The reference's signature architecture: KMeans/GM partitions the
 feature space; per-cluster RandomForests score within partitions;
 small/pure clusters short-circuit to a hard label via the
 cluster-split rule (README.md:1595-1613). ``train_cluster_models``
-fits one Spark pipeline per modeled cluster; with more than one such
+fits one [StringIndexer, classifier] pipeline per modeled cluster
+(``classify.train_binary_classifier``); with more than one such
 cluster the fits run concurrently on a thread pool, which replaces the
 reference's serial driver loop while the data stays distributed.
 
-Probability remap (D5): the reference reads the per-cluster
-StringIndexer's majority label to decide which probability-vector slot
-means "attack" — reproduced here with vector_to_array, no Python UDF.
+Probability remap (D5): each cluster's own StringIndexer decides which
+probability-vector slot means "attack" (``classify.attack_probability``)
+— vector_to_array, no Python UDF.
 """
 
 from __future__ import annotations
@@ -18,16 +19,13 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml import PipelineModel
 from pyspark.ml.clustering import GaussianMixture, KMeans
-from pyspark.ml.feature import StringIndexer
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nsl_kdd_spark.ml.classify import DEFAULT_SEED, attack_probability, train_binary_classifier
 from nsl_kdd_spark.operators.joins import union_by_name
-
-DEFAULT_SEED = 4667979835606274383  # the reference's fixed seed (README.md:1387)
 
 
 def kmeans_assign(
@@ -105,23 +103,6 @@ def split_clusters(
     return out
 
 
-def _attack_slot(pipeline_model: PipelineModel) -> int:
-    """Which probability slot means 'attack': StringIndexer orders
-    labels by frequency, so slot 0 is the majority label (D5 remap,
-    README.md:1679-1680)."""
-    indexer = pipeline_model.stages[0]
-    return 0 if indexer.labels[0] == "attack" else 1
-
-
-def make_cluster_pipeline(classifier, label_col: str = "labels2") -> Pipeline:
-    """[StringIndexer, classifier] — per-cluster indexer so indices
-    reflect the cluster's own majority (the reference trains
-    Pipeline[StringIndexer, slicer, RF] per cluster; the slicer is
-    applied up front in this engine)."""
-    indexer = StringIndexer(inputCol=label_col, outputCol="label", handleInvalid="skip")
-    return Pipeline(stages=[indexer, classifier])
-
-
 def train_cluster_models(
     df: DataFrame,
     split: ClusterSplit,
@@ -132,10 +113,12 @@ def train_cluster_models(
     """Fit one pipeline per modeled cluster. With more than one, the
     fits run on a thread pool (independent Spark jobs scheduled
     concurrently — removes the serial-loop bottleneck the reference
-    hits at 234 s / 6 clusters, README.md:1698-1704)."""
+    hits at 234 s / 6 clusters, README.md:1698-1704). Each cluster
+    gets its own indexer, so its indices reflect the cluster's own
+    majority label."""
     def fit(k: int) -> tuple[int, PipelineModel]:
         sub = df.filter(F.col(cluster_col) == k)
-        return k, make_cluster_pipeline(make_classifier(), label_col).fit(sub)
+        return k, train_binary_classifier(sub, make_classifier(), label_col)
 
     if len(split.modeled) > 1:
         with ThreadPoolExecutor(max_workers=min(8, len(split.modeled))) as ex:
@@ -165,12 +148,7 @@ def score_clusters(
             .select(F.col(id_col), mapping_expr[F.col(cluster_col)].alias(prob_col))
         )
     for k, model in models.items():
-        scored = model.transform(df.filter(F.col(cluster_col) == k))
-        slot = _attack_slot(model)
         parts.append(
-            scored.select(
-                F.col(id_col),
-                vector_to_array(F.col("probability"))[slot].alias(prob_col),
-            )
+            attack_probability(model, df.filter(F.col(cluster_col) == k), prob_col, id_col)
         )
     return union_by_name(parts)

@@ -1,9 +1,11 @@
 """Feature-engineering operators (SURVEY.md §2.10 M4-M9).
 
-Wraps the pyspark.ml estimators the reference uses (VectorAssembler /
-VectorIndexer / VectorSlicer / StandardScaler-equivalent / PCA) behind
-small functions, plus the expression-based standardizer and OHE that
-replace the reference's Python-UDF paths.
+Wraps the pyspark.ml estimators the pipeline uses (VectorAssembler,
+PCA) behind small functions, plus the expression-based standardizer
+and OHE that replace the reference's Python-UDF paths. The reference's
+VectorIndexer/VectorSlicer steps (M8/M9) have no counterpart: feature
+selection happens on columns before assembly, and the tree models
+treat the 0/1 binary dimensions as continuous.
 """
 
 from __future__ import annotations
@@ -11,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.ml.feature import PCA, VectorAssembler, VectorIndexer, VectorSlicer
+from pyspark.ml.feature import PCA, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,32 +80,10 @@ def one_hot_encode(
 
 
 def assemble(
-    df: DataFrame,
-    input_cols: Sequence[str],
-    output_col: str = "raw_features",
-    index_binary: bool = True,
-    max_categories: int = 2,
+    df: DataFrame, input_cols: Sequence[str], output_col: str = "raw_features"
 ) -> DataFrame:
-    """VectorAssembler (+ optional VectorIndexer marking binary dims
-    categorical — M7/M8, README.md:1354-1355)."""
-    assembled = VectorAssembler(
-        inputCols=list(input_cols), outputCol=output_col
-    ).transform(df)
-    if not index_binary:
-        return assembled
-    indexer = VectorIndexer(
-        inputCol=output_col, outputCol="indexed_features", maxCategories=max_categories
-    ).fit(assembled)
-    return indexer.transform(assembled)
-
-
-def slice_features(
-    df: DataFrame, names: Sequence[str], input_col: str = "indexed_features",
-    output_col: str = "features",
-) -> DataFrame:
-    """VectorSlicer by feature name (M9, README.md:1489...3607)."""
-    slicer = VectorSlicer(inputCol=input_col, outputCol=output_col, names=list(names))
-    return slicer.transform(df)
+    """VectorAssembler over ``input_cols`` (M7, README.md:1354)."""
+    return VectorAssembler(inputCols=list(input_cols), outputCol=output_col).transform(df)
 
 
 def pca_project(

@@ -86,6 +86,10 @@ def connected_components(
     # second exchange, and every iteration's neighbor_min join reads
     # the persisted b-partitioning instead of re-shuffling the full
     # edge table — one edge shuffle total instead of one per round.
+    # Trade-off: that single exchange moves the undeduplicated, doubled
+    # edge table (distinct() first ran a partial aggregate before its
+    # exchange), so inputs with many duplicate or parallel edges shuffle
+    # more bytes than a dedup-first plan would.
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

@@ -34,7 +34,16 @@ def observe_quality(
     after the next action on ``df``, ``observation.get`` holds
     ``n_rows``, ``null_<col>`` per requested column, and
     ``bad_<name>`` per violation predicate (count of rows where the
-    predicate is TRUE)."""
+    predicate is TRUE).
+
+    Caveat: registering a pyspark ``Observation`` poisons the session
+    for later ML fits. It initialises the session's
+    ``ObservationManager``, which is not java-serializable, so every
+    later task closure that captures the session (an MLlib model whose
+    training summary holds it, for one) fails with Task-not-serializable
+    (OPTIMIZATION_r14.md §1). Call this on a session that trains no
+    models afterwards, or count with a scan of the materialised table
+    instead, as ``graph.py`` does."""
     obs = Observation(name)
     metrics = [F.count(F.lit(1)).alias("n_rows")]
     for c in null_cols:

@@ -15,14 +15,25 @@ point takes overrides so tests run in seconds.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
+from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nsl_kdd_spark.functions.scalar import hard_vote_or, soft_vote
+from nsl_kdd_spark.functions.scalar import threshold as thr
 from nsl_kdd_spark.ml.ar import attribute_ratio, select_features
-from nsl_kdd_spark.ml.classify import attack_probability, make_rf, train_binary_classifier
-from nsl_kdd_spark.ml.cluster import (
+from nsl_kdd_spark.ml.classify import (
     DEFAULT_SEED,
+    attack_probability,
+    instance_weights,
+    make_rf,
+    train_binary_classifier,
+    train_lr_stacker,
+)
+from nsl_kdd_spark.ml.cluster import (
+    gaussian_mixture_assign,
     kmeans_assign,
     score_clusters,
     split_clusters,
@@ -33,9 +44,11 @@ from nsl_kdd_spark.ml.features import (
     fit_categories,
     fit_standardizer,
     one_hot_encode,
+    pca_project,
 )
 from nsl_kdd_spark.ml.labels import with_labels
 from nsl_kdd_spark.ml.metrics import binary_metrics
+from nsl_kdd_spark.operators.joins import assemble as join_assemble
 from nsl_kdd_spark.operators.relational import (
     drop_constant_columns,
     replace_values,
@@ -120,6 +133,76 @@ def build_features(
     return _feats(prepared.train), _feats(prepared.test), feature_cols
 
 
+# The steps every flow shares. They call the pipeline steps through this
+# module's globals (prepare, build_features, kmeans_assign, ...), so a
+# caller that wraps those names sees every flow's steps.
+
+def _vectors(
+    spark: SparkSession, train_path: str, test_path: str, cfg: NslConfig
+) -> tuple[DataFrame, DataFrame]:
+    """prepare -> build_features -> assemble: (train, test) with the
+    feature vector in ``raw_features``."""
+    prepared = prepare(spark, train_path, test_path)
+    train_f, test_f, feature_cols = build_features(prepared, cfg)
+    return assemble(train_f, feature_cols), assemble(test_f, feature_cols)
+
+
+def _rf(cfg: NslConfig):
+    return make_rf(num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,
+                   features_col="raw_features")
+
+
+def _km_assign(df: DataFrame, cfg: NslConfig):
+    """KMeans(k) on the feature vectors: (model, df + cluster)."""
+    return kmeans_assign(df, "raw_features", k=cfg.kmeans_k, seed=cfg.seed)
+
+
+def _gm_assign(df: DataFrame, cfg: NslConfig):
+    """PCA(k=2) -> GaussianMixture(k): (model, df + cluster), the model
+    applying both stages to new data."""
+    pca_model, projected = pca_project(df, k=2, input_col="raw_features")
+    gm_model, assigned = gaussian_mixture_assign(
+        projected, "pca_features", k=cfg.kmeans_k, seed=cfg.seed
+    )
+    return PipelineModel(stages=[pca_model, gm_model]), assigned
+
+
+def _cluster_models(assigned: DataFrame, cfg: NslConfig):
+    """The cluster-split rule, then one RF per modeled cluster:
+    (split, models)."""
+    split = split_clusters(assigned, min_rows=cfg.min_cluster_rows)
+    return split, train_cluster_models(assigned, split, partial(_rf, cfg))
+
+
+def _category_model(train_v: DataFrame, cats: tuple[str, ...], cfg: NslConfig):
+    """<cats>-vs-normal RF (M16)."""
+    sub = train_v.filter(F.col("labels5").isin("normal", *cats))
+    return train_binary_classifier(sub, _rf(cfg))
+
+
+def _decide(base: DataFrame, probs: DataFrame, cfg: NslConfig) -> DataFrame:
+    """(id, labels2, ...) joined with (id, prob), plus the thresholded
+    prediction ``pred`` and the 0/1 truth ``y``."""
+    return (
+        base.join(probs, on="id")
+        .withColumn("pred", thr(F.col("prob"), cfg.threshold))
+        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
+    )
+
+
+def _cluster_rf(
+    spark: SparkSession, train_path: str, test_path: str, cfg: NslConfig, assign
+) -> dict[str, DataFrame]:
+    """Cluster (``assign``) -> per-cluster RF -> score the test set."""
+    train_v, test_v = _vectors(spark, train_path, test_path, cfg)
+    model, train_c = assign(train_v, cfg)
+    test_c = model.transform(test_v)
+    split, models = _cluster_models(train_c, cfg)
+    probs = score_clusters(test_c.cache(), split, models, prob_col="prob")
+    scored = _decide(test_c.select("id", "labels2"), probs, cfg)
+    return {"scored": scored, "metrics": binary_metrics(scored, "y", "pred")}
+
+
 def kmeans_rf(
     spark: SparkSession,
     train_path: str,
@@ -127,40 +210,9 @@ def kmeans_rf(
     cfg: NslConfig | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's best single model (KMeans + per-cluster RF,
-    README.md:1543-1762): returns {"scored": (id, prob, pred, labels2),
-    "metrics": one-row report} for the test set."""
-    cfg = cfg or NslConfig()
-    prepared = prepare(spark, train_path, test_path)
-    train_f, test_f, feature_cols = build_features(prepared, cfg)
-
-    train_v = assemble(train_f, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
-
-    model, train_c = kmeans_assign(
-        train_v, "raw_features", k=cfg.kmeans_k, seed=cfg.seed
-    )
-    test_c = model.transform(test_v)
-
-    split = split_clusters(train_c, min_rows=cfg.min_cluster_rows)
-    rf = lambda: make_rf(  # noqa: E731
-        num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,
-        features_col="raw_features",
-    )
-    models = train_cluster_models(train_c, split, rf)
-
-    probs = score_clusters(test_c.cache(), split, models, prob_col="prob")
-    scored = (
-        test_c.select("id", "labels2")
-        .join(probs, on="id", how="inner")
-        .withColumn(
-            "pred",
-            F.when(F.col("prob") >= cfg.threshold, 1.0).otherwise(0.0),
-        )
-        .withColumn(
-            "y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0)
-        )
-    )
-    return {"scored": scored, "metrics": binary_metrics(scored, "y", "pred")}
+    README.md:1543-1762): returns {"scored": (id, labels2, prob, pred,
+    y), "metrics": one-row report} for the test set."""
+    return _cluster_rf(spark, train_path, test_path, cfg or NslConfig(), _km_assign)
 
 
 def category_rf(
@@ -173,30 +225,15 @@ def category_rf(
     """Per-category specialist (M16): <category>-vs-normal RF
     (README.md:2216-2238 for DoS; Probe/R2L+U2R identical shape)."""
     cfg = cfg or NslConfig()
-    prepared = prepare(spark, train_path, test_path)
-    train_f, test_f, feature_cols = build_features(prepared, cfg)
-
+    train_v, test_v = _vectors(spark, train_path, test_path, cfg)
     cats = (category,) if category != "R2L_U2R" else ("R2L", "U2R")
-    sub = train_f.filter(F.col("labels5").isin("normal", *cats))
-    train_v = assemble(sub, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
-
-    model = train_binary_classifier(
-        train_v,
-        make_rf(num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,
-                features_col="raw_features"),
-    )
+    model = _category_model(train_v, cats, cfg)
     probs = attack_probability(model, test_v.cache(), prob_col="prob")
     # labels5 rides along so callers can score the reference's
     # category-vs-normal slice (README.md:2332 filters the test set to
     # normal + the category before its e=0.5 report) as well as the
     # full-test labels2 view
-    scored = (
-        test_v.select("id", "labels2", "labels5")
-        .join(probs, on="id")
-        .withColumn("pred", F.when(F.col("prob") >= cfg.threshold, 1.0).otherwise(0.0))
-        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
-    )
+    scored = _decide(test_v.select("id", "labels2", "labels5"), probs, cfg)
     subset = scored.filter(F.col("labels5").isin("normal", *cats))
     return {
         "scored": scored,
@@ -214,38 +251,7 @@ def gaussian_rf(
     """The reference's alternative clustering family (M13,
     README.md:1831-1950): PCA(k=2) -> GaussianMixture(k) -> per-cluster
     RF, scored and assembled exactly like the KMeans path."""
-    from nsl_kdd_spark.ml.cluster import gaussian_mixture_assign
-    from nsl_kdd_spark.ml.features import pca_project
-
-    cfg = cfg or NslConfig()
-    prepared = prepare(spark, train_path, test_path)
-    train_f, test_f, feature_cols = build_features(prepared, cfg)
-
-    train_v = assemble(train_f, feature_cols, index_binary=False)
-    test_v = assemble(test_f, feature_cols, index_binary=False)
-
-    pca_model, train_p = pca_project(train_v, k=2, input_col="raw_features")
-    test_p = pca_model.transform(test_v)
-
-    gm_model, train_c = gaussian_mixture_assign(
-        train_p, "pca_features", k=cfg.kmeans_k, seed=cfg.seed
-    )
-    test_c = gm_model.transform(test_p)
-
-    split = split_clusters(train_c, min_rows=cfg.min_cluster_rows)
-    rf = lambda: make_rf(  # noqa: E731
-        num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,
-        features_col="raw_features",
-    )
-    models = train_cluster_models(train_c, split, rf)
-    probs = score_clusters(test_c.cache(), split, models, prob_col="prob")
-    scored = (
-        test_c.select("id", "labels2")
-        .join(probs, on="id", how="inner")
-        .withColumn("pred", F.when(F.col("prob") >= cfg.threshold, 1.0).otherwise(0.0))
-        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
-    )
-    return {"scored": scored, "metrics": binary_metrics(scored, "y", "pred")}
+    return _cluster_rf(spark, train_path, test_path, cfg or NslConfig(), _gm_assign)
 
 
 def combine_scores(
@@ -257,9 +263,6 @@ def combine_scores(
     """The reference's decision layer (F4/F5/F6, README.md:3113-3334):
     given a table with per-model probability columns, add
     soft-vote blend, per-model hard preds, and the OR-vote."""
-    from nsl_kdd_spark.functions.scalar import hard_vote_or, soft_vote
-    from nsl_kdd_spark.functions.scalar import threshold as thr
-
     out = base.withColumn(
         "blend", soft_vote(*prob_cols, weights=weights)
     ).withColumn("blend_pred", thr(F.col("blend"), threshold))
@@ -286,112 +289,61 @@ def nsl_ensemble(
     Features/vectors are built ONCE and shared across all five model
     families (the reference re-prepares per section); every prob table
     is (id, prob) joined back broadcast-style (J1 assembly)."""
-    from nsl_kdd_spark.functions.scalar import hard_vote_or, soft_vote
-    from nsl_kdd_spark.functions.scalar import threshold as thr
-    from nsl_kdd_spark.ml.classify import (
-        instance_weights,
-        stacker_probability,
-        train_lr_stacker,
-    )
-    from nsl_kdd_spark.ml.cluster import gaussian_mixture_assign
-    from nsl_kdd_spark.ml.features import pca_project
-    from nsl_kdd_spark.operators.joins import assemble as join_assemble
-
     cfg = cfg or NslConfig()
-    prepared = prepare(spark, train_path, test_path)
-    train_f, test_f, feature_cols = build_features(prepared, cfg)
-    full_v = assemble(train_f, feature_cols, index_binary=False).cache()
-    test_v = assemble(test_f, feature_cols, index_binary=False).cache()
-    fit_v, cv_v = full_v.randomSplit([0.8, 0.2], seed=cfg.seed)
+    full_v, test_v = _vectors(spark, train_path, test_path, cfg)
+    test_v = test_v.cache()
+    fit_v, cv_v = full_v.cache().randomSplit([0.8, 0.2], seed=cfg.seed)
     fit_v = fit_v.cache()
     cv_v = cv_v.cache()
 
-    rf = lambda: make_rf(  # noqa: E731
-        num_trees=cfg.rf_trees, max_depth=cfg.rf_depth, seed=cfg.seed,
-        features_col="raw_features",
-    )
-
-    def cluster_family(assigner) -> tuple[DataFrame, DataFrame]:
+    def cluster_family(assign) -> tuple[DataFrame, DataFrame]:
         """fit on fit_v, score cv_v and test_v -> (cv probs, test probs)."""
-        model, fit_c = assigner(fit_v)
-        cv_c = model.transform(cv_v).cache()
-        test_c = model.transform(test_v).cache()
-        split = split_clusters(fit_c, min_rows=cfg.min_cluster_rows)
-        models = train_cluster_models(fit_c.cache(), split, rf)
-        return (
-            score_clusters(cv_c, split, models, prob_col="prob"),
-            score_clusters(test_c, split, models, prob_col="prob"),
+        model, fit_c = assign(fit_v, cfg)
+        split, models = _cluster_models(fit_c.cache(), cfg)
+        return tuple(
+            score_clusters(model.transform(v).cache(), split, models, prob_col="prob")
+            for v in (cv_v, test_v)
         )
-
-    def km_assign(df):
-        return kmeans_assign(df, "raw_features", k=cfg.kmeans_k, seed=cfg.seed)
-
-    def gm_assign(df):
-        pca_model, df_p = pca_project(df, k=2, input_col="raw_features")
-        gm_model, assigned = gaussian_mixture_assign(
-            df_p, "pca_features", k=cfg.kmeans_k, seed=cfg.seed
-        )
-        class _Chain:
-            def transform(self, other):
-                return gm_model.transform(pca_model.transform(other))
-        return _Chain(), assigned
-
-    km_cv, km_test = cluster_family(km_assign)
-    gm_cv, gm_test = cluster_family(gm_assign)
 
     def category_family(cats: tuple[str, ...]) -> tuple[DataFrame, DataFrame]:
-        sub = fit_v.filter(F.col("labels5").isin("normal", *cats))
-        model = train_binary_classifier(sub, rf())
-        return (
-            attack_probability(model, cv_v, prob_col="prob"),
-            attack_probability(model, test_v, prob_col="prob"),
-        )
-
-    dos_cv, dos_test = category_family(("DoS",))
-    probe_cv, probe_test = category_family(("Probe",))
-    r2l_cv, r2l_test = category_family(("R2L", "U2R"))
-
-    def assemble_probs(base: DataFrame, probs: list[DataFrame]) -> DataFrame:
-        named = [
-            p.withColumnRenamed("prob", name)
-            for p, name in zip(
-                probs, ["p_km", "p_gm", "p_dos", "p_probe", "p_r2l"]
-            )
-        ]
-        return join_assemble(base.select("id", "labels2"), named, on="id")
-
-    cv_tbl = assemble_probs(cv_v, [km_cv, gm_cv, dos_cv, probe_cv, r2l_cv]).cache()
-    test_tbl = assemble_probs(
-        test_v, [km_test, gm_test, dos_test, probe_test, r2l_test]
-    ).cache()
+        model = _category_model(fit_v, cats, cfg)
+        return tuple(attack_probability(model, v, prob_col="prob") for v in (cv_v, test_v))
 
     prob_cols = ["p_km", "p_gm", "p_dos", "p_probe", "p_r2l"]
+    families = [
+        cluster_family(_km_assign),
+        cluster_family(_gm_assign),
+        category_family(("DoS",)),
+        category_family(("Probe",)),
+        category_family(("R2L", "U2R")),
+    ]
+
+    def assemble_probs(base: DataFrame, probs) -> DataFrame:
+        named = [p.withColumnRenamed("prob", name) for p, name in zip(probs, prob_cols)]
+        return join_assemble(base.select("id", "labels2"), named, on="id")
+
+    cv_tbl = assemble_probs(cv_v, [cv for cv, _ in families]).cache()
+    test_tbl = assemble_probs(test_v, [test for _, test in families]).cache()
+
     stacker = train_lr_stacker(
         instance_weights(cv_tbl, "labels2", {"normal": 1.0, "attack": 100.0}),
         prob_cols,
     )
-
-    def decide(tbl: DataFrame) -> DataFrame:
-        out = tbl.withColumn(
-            "blend", soft_vote(*prob_cols, weights=[3.0, 1.0, 1.0, 1.0, 1.0])
-        )
-        for c in prob_cols:
-            out = out.withColumn(f"{c}_pred", thr(F.col(c), cfg.threshold))
-        out = out.withColumn(
-            "or_vote", hard_vote_or(*[f"{c}_pred" for c in prob_cols])
-        )
-        out = out.join(stacker_probability(stacker, out, "p_stack"), on="id")
-        return out.withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
-
-    decided = decide(test_tbl)
+    decided = combine_scores(
+        test_tbl, prob_cols, weights=[3.0, 1.0, 1.0, 1.0, 1.0], threshold=cfg.threshold
+    )
+    decided = (
+        decided.join(attack_probability(stacker, decided, "p_stack"), on="id")
+        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
+    )
     strategies = {
-        "kmeans_rf": thr(F.col("p_km"), cfg.threshold),
-        "blend": thr(F.col("blend"), cfg.threshold),
+        "kmeans_rf": F.col("p_km_pred"),
+        "blend": F.col("blend_pred"),
         "or_vote": F.col("or_vote"),
         "lr_stack": thr(F.col("p_stack"), cfg.threshold),
     }
-    metrics = {}
-    for name, pred in strategies.items():
-        scored = decided.withColumn("pred", pred)
-        metrics[name] = binary_metrics(scored, "y", "pred")
+    metrics = {
+        name: binary_metrics(decided.withColumn("pred", pred), "y", "pred")
+        for name, pred in strategies.items()
+    }
     return {"scored": decided, "metrics": metrics}

@@ -1383,8 +1383,7 @@ def q39_rf_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     80/20 split, binary target, one-row metric report."""
     from pyspark.ml.functions import array_to_vector
 
-    from nsl_kdd_spark.ml.classify import make_rf, train_binary_classifier
-    from nsl_kdd_spark.ml.cluster import DEFAULT_SEED
+    from nsl_kdd_spark.ml.classify import DEFAULT_SEED, make_rf, train_binary_classifier
     from nsl_kdd_spark.ml.metrics import binary_metrics
 
     t = load_tables(spark, sf_dir)
@@ -1513,7 +1512,7 @@ def q41_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q42_stratified_sample")
 def q42_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nsl_kdd_spark.ml.cluster import DEFAULT_SEED
+    from nsl_kdd_spark.ml.classify import DEFAULT_SEED
 
     t = load_tables(spark, sf_dir)
     fractions = {"click": 0.1, "view": 0.1, "error": 1.0, "purchase": 1.0, "signup": 0.5}

@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.ml.classify import (
+    attack_probability,
     instance_weights,
-    stacker_probability,
     train_lr_stacker,
     train_rf_ensembler,
 )
@@ -56,7 +56,7 @@ def test_lr_stacker_and_rf_ensembler(spark):
     df = instance_weights(_scores(spark), "labels2",
                           {"normal": 1.0, "attack": 100.0})
     lr = train_lr_stacker(df, ["p_a", "p_b", "p_c"])
-    lr_probs = stacker_probability(lr, df, "lr_prob")
+    lr_probs = attack_probability(lr, df, "lr_prob")
     joined = df.join(lr_probs, on="id")
     # separable toy data: stacker must rank attacks above normals
     agg = joined.groupBy("labels2").agg(F.avg("lr_prob").alias("m")).collect()
@@ -66,7 +66,7 @@ def test_lr_stacker_and_rf_ensembler(spark):
     pred_df = combine_scores(df, ["p_a", "p_b", "p_c"])
     rf = train_rf_ensembler(pred_df, ["p_a_pred", "p_b_pred", "p_c_pred"],
                             num_trees=20, max_depth=3)
-    rf_probs = stacker_probability(rf, pred_df, "rf_prob")
+    rf_probs = attack_probability(rf, pred_df, "rf_prob")
     joined = pred_df.join(rf_probs, on="id")
     agg = joined.groupBy("labels2").agg(F.avg("rf_prob").alias("m")).collect()
     means = {r["labels2"]: r["m"] for r in agg}

@@ -1,5 +1,5 @@
-"""ml.features layer: standardizer exactness, assembler/indexer/slicer
-round-trips, PCA shapes (M6-M10)."""
+"""ml.features layer: standardizer exactness, OHE vocabularies, the
+assembler feeding PCA (M4-M10)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from nsl_kdd_spark.ml.features import (
     fit_standardizer,
     one_hot_encode,
     pca_project,
-    slice_features,
 )
 
 
@@ -39,24 +38,12 @@ def test_one_hot_encode_drops_input(spark):
     assert set(out.columns) == {"x", "c_a", "c_b"}
 
 
-def test_assemble_index_slice_roundtrip(spark):
-    df = spark.createDataFrame(
-        [(1.0, 0.0, 5.0), (2.0, 1.0, 6.0), (3.0, 0.0, 7.0)],
-        "a double, b double, c double",
-    )
-    v = assemble(df, ["a", "b", "c"], index_binary=True)
-    assert "raw_features" in v.columns and "indexed_features" in v.columns
-    sliced = slice_features(v, names=["a", "c"], input_col="raw_features")
-    row = sliced.first()
-    assert list(row["features"]) == [row["a"], row["c"]]
-
-
 def test_pca_shapes(spark):
     df = spark.createDataFrame(
         [(float(i), float(2 * i), float(i % 3)) for i in range(20)],
         "a double, b double, c double",
     )
-    v = assemble(df, ["a", "b", "c"], index_binary=False)
+    v = assemble(df, ["a", "b", "c"])
     model, out = pca_project(v, k=2, input_col="raw_features")
     assert len(out.first()["pca_features"]) == 2
     assert len(model.explainedVariance) == 2

@@ -1,9 +1,11 @@
-"""The paper's KMeans + per-cluster RF pipeline end to end on seeded
-NSL-KDD-shaped CSVs from ``perfbench/gen_nsl.py``, so it runs on every
-host. The generator reports the facts it planted (row and attack
-counts, dirty ``su_attempted`` values); every assertion here is exact.
-``test_nsl_pipeline.py`` keeps the parity checks against the real
-files."""
+"""The paper's four pipeline flows end to end on seeded NSL-KDD-shaped
+CSVs from ``perfbench/gen_nsl.py``, so they run on every host. The
+generator reports the facts it planted (row and attack counts, dirty
+``su_attempted`` values); every invariant here is exact. The confusion
+matrices are pinned as well, at the values a ``local[4]`` session with
+4 shuffle partitions produces, so a refactor of the flows shows up as a
+changed matrix. ``test_nsl_pipeline.py`` keeps the parity checks
+against the real files."""
 
 from __future__ import annotations
 
@@ -13,15 +15,47 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from nsl_kdd_spark.pipeline import NslConfig, kmeans_rf, prepare
+from nsl_kdd_spark.ml.ar import attribute_ratio
+from nsl_kdd_spark.ml.cluster import kmeans_assign, split_clusters
+from nsl_kdd_spark.ml.features import assemble, fit_standardizer
+from nsl_kdd_spark.pipeline import (
+    NslConfig,
+    build_features,
+    category_rf,
+    gaussian_rf,
+    kmeans_rf,
+    nsl_ensemble,
+    prepare,
+)
+from nsl_kdd_spark.schema import nsl_kdd_roles
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 )
 import gen_nsl  # noqa: E402
+from workloads import _read_nsl, numpy_attribute_ratio  # noqa: E402
 
 N_TRAIN, N_TEST, SEED = 2000, 1000, 1
 CFG = NslConfig(kmeans_k=4, rf_trees=10, rf_depth=6)
+
+# (tn, fp, fn, tp) per flow on these files
+KMEANS_CM = (394, 28, 17, 561)
+GAUSSIAN_CM = (394, 28, 16, 562)
+CATEGORY_CMS = {   # category -> (full test, normal + category subset)
+    "DoS": ((405, 17, 253, 325), (405, 17, 2, 324)),
+    "R2L_U2R": ((416, 6, 455, 123), (416, 6, 21, 123)),
+}
+ENSEMBLE_CMS = {
+    "kmeans_rf": (394, 28, 22, 556),
+    "blend": (396, 26, 68, 510),
+    "or_vote": (394, 28, 11, 567),
+    "lr_stack": (0, 422, 0, 578),
+}
+
+
+def _cm(metrics) -> tuple[int, int, int, int]:
+    row = metrics.first()
+    return row["tn"], row["fp"], row["fn"], row["tp"]
 
 
 @pytest.fixture(scope="module")
@@ -39,8 +73,7 @@ def runs(spark, nsl_files):
     out = []
     for _ in range(2):
         res = kmeans_rf(spark, train, test, CFG)
-        row = res["metrics"].first()
-        out.append((res["scored"].count(), (row["tn"], row["fp"], row["fn"], row["tp"])))
+        out.append((res["scored"].count(), _cm(res["metrics"])))
         spark.catalog.clearCache()
     return out
 
@@ -61,6 +94,63 @@ def test_kmeans_rf_deterministic_in_session(runs):
     assert runs[0] == runs[1]
 
 
+def test_kmeans_rf_confusion_matrix_pinned(runs):
+    assert runs[0][1] == KMEANS_CM
+
+
+def test_gaussian_rf(spark, nsl_files):
+    train, test, _, test_truth = nsl_files
+    try:
+        res = gaussian_rf(spark, train, test, CFG)
+        rows, cm = res["scored"].count(), _cm(res["metrics"])
+    finally:
+        spark.catalog.clearCache()
+    tn, fp, fn, tp = cm
+    assert rows == N_TEST
+    assert tn + fp + fn + tp == N_TEST
+    assert tp + fn == test_truth.attacks
+    assert cm == GAUSSIAN_CM
+
+
+@pytest.mark.parametrize("category", sorted(CATEGORY_CMS))
+def test_category_rf(spark, nsl_files, category):
+    train, test, _, test_truth = nsl_files
+    cats = ("R2L", "U2R") if category == "R2L_U2R" else (category,)
+    try:
+        res = category_rf(spark, train, test, category, CFG)
+        scored = res["scored"]
+        rows = scored.count()
+        subset = scored.filter(F.col("labels5").isin("normal", *cats))
+        subset_rows = subset.count()
+        subset_attacks = subset.filter(F.col("labels2") == "attack").count()
+        full, part = _cm(res["metrics"]), _cm(res["metrics_subset"])
+    finally:
+        spark.catalog.clearCache()
+    assert rows == N_TEST
+    assert sum(full) == N_TEST
+    assert full[3] + full[2] == test_truth.attacks
+    assert sum(part) == subset_rows
+    assert part[3] + part[2] == subset_attacks
+    # every normal row is in the subset, so the normal half agrees
+    assert part[:2] == full[:2]
+    assert (full, part) == CATEGORY_CMS[category]
+
+
+def test_nsl_ensemble(spark, nsl_files):
+    train, test, _, test_truth = nsl_files
+    try:
+        res = nsl_ensemble(spark, train, test, CFG)
+        rows = res["scored"].count()
+        cms = {name: _cm(m) for name, m in res["metrics"].items()}
+    finally:
+        spark.catalog.clearCache()
+    assert rows == N_TEST
+    for tn, fp, fn, tp in cms.values():
+        assert tn + fp + fn + tp == N_TEST
+        assert tp + fn == test_truth.attacks
+    assert cms == ENSEMBLE_CMS
+
+
 def test_prepare_repairs_generated(spark, nsl_files):
     train, test, train_truth, test_truth = nsl_files
     assert train_truth.su_attempted_2 > 0 and test_truth.su_attempted_2 > 0
@@ -72,3 +162,82 @@ def test_prepare_repairs_generated(spark, nsl_files):
             assert "num_outbound_cmds" not in df.columns
     finally:
         spark.catalog.clearCache()
+
+
+def _deterministic_stages(spark, train, test, conf: dict[str, str]) -> dict:
+    """What the pipeline computes before any random forest, under the
+    session settings ``conf``: prepare row counts, attribute-ratio rows
+    and standardiser means and stds (plain double sums, as
+    ``build_features`` runs them, over every non-constant numeric
+    column), and the cluster split of a KMeans assignment (a short
+    KMeans: the split rule, not the fit, is under test). The shared
+    session's settings are restored afterwards."""
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        prepared = prepare(spark, train, test)
+        roles = nsl_kdd_roles()
+        numeric = [c for c in roles.numeric if c in prepared.train.columns]
+        binary = [c for c in roles.binary if c in prepared.train.columns]
+        ar = attribute_ratio(
+            prepared.train, numeric_cols=numeric, binary_cols=binary,
+            label_col="labels5", exact_scale=None,
+        ).collect()
+        scaler = fit_standardizer(prepared.train, numeric, exact_scale=None)
+        train_f, _, feature_cols = build_features(prepared, CFG)
+        _, assigned = kmeans_assign(
+            assemble(train_f, feature_cols), "raw_features", k=CFG.kmeans_k,
+            init_steps=2, max_iter=5, seed=CFG.seed,
+        )
+        split = split_clusters(assigned, min_rows=CFG.min_cluster_rows)
+        return {
+            "rows": (prepared.train.count(), prepared.test.count()),
+            "ar": [tuple(r) for r in ar],
+            "means": scaler.means,
+            "stddevs": scaler.stddevs,
+            "split": (split.mapping, split.modeled),
+        }
+    finally:
+        spark.catalog.clearCache()
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def default_stages(spark, nsl_files):
+    """The deterministic stages under the test session's settings
+    (4 shuffle partitions, AQE on)."""
+    return _deterministic_stages(spark, *nsl_files[:2], {
+        "spark.sql.shuffle.partitions": "4", "spark.sql.adaptive.enabled": "true",
+    })
+
+
+def test_features_match_numpy(default_stages, nsl_files):
+    """Attribute ratio and standardiser against a numpy/pandas
+    recomputation from the CSV."""
+    train = nsl_files[0]
+    got_ar = dict(default_stages["ar"])
+    want_ar, want_numeric = numpy_attribute_ratio(train)
+    assert set(got_ar) == set(want_ar)
+    for c, want in want_ar.items():
+        assert got_ar[c] == pytest.approx(want, rel=1e-9, abs=1e-12), c
+    assert set(default_stages["means"]) == set(want_numeric)
+    frame = _read_nsl(train)
+    for c in want_numeric:
+        assert default_stages["means"][c] == pytest.approx(
+            frame[c].mean(), rel=1e-9, abs=1e-12), c
+        assert default_stages["stddevs"][c] == pytest.approx(
+            frame[c].std(ddof=1), rel=1e-9, abs=1e-12), c
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.shuffle.partitions": "1"},
+    {"spark.sql.adaptive.enabled": "false"},
+], ids=["shuffle_partitions_1", "aqe_off"])
+def test_deterministic_stages_ignore_session_config(spark, nsl_files, default_stages, conf):
+    """The stages before the random forests collect equal under 1 vs 4
+    shuffle partitions and AQE on vs off. RF output is left out on
+    purpose: its bootstrap samples follow the input's partitioning, so
+    scores may legitimately differ between configurations."""
+    assert _deterministic_stages(spark, *nsl_files[:2], conf) == default_stages
