@@ -47,19 +47,26 @@ def train_binary_classifier(
     return Pipeline(stages=[indexer, classifier]).fit(df)
 
 
-def attack_probability(
-    model: PipelineModel, df: DataFrame, prob_col: str, id_col: str = "id"
-) -> DataFrame:
-    """(id, prob-of-attack) from any fitted [StringIndexer, ...,
-    classifier] pipeline (per-category RF, per-cluster RF, stacker,
-    ensembler): slot chosen by the indexer's label order
-    (vector_to_array, replacing the reference's rdd row[1] extraction —
-    README.md:2245, R3; the D5 remap, README.md:1679-1680)."""
-    indexer = model.stages[0]
-    slot = list(indexer.labels).index("attack") if "attack" in indexer.labels else 1
-    return model.transform(df).select(
-        F.col(id_col), vector_to_array(F.col("probability"))[slot].alias(prob_col)
-    )
+def attack_slot(model: PipelineModel) -> int:
+    """The probability-vector slot that means "attack" for a fitted
+    [StringIndexer, ..., classifier] pipeline: the indexer's label order
+    decides it (the D5 remap, README.md:1679-1680)."""
+    labels = list(model.stages[0].labels)
+    return labels.index("attack") if "attack" in labels else 1
+
+
+def attack_probability(model: PipelineModel, df: DataFrame, prob_col: str) -> DataFrame:
+    """``df`` plus ``prob_col``, the probability of attack, from any
+    fitted [StringIndexer, ..., classifier] pipeline (per-category RF,
+    per-cluster RF, stacker, ensembler; vector_to_array replaces the
+    reference's rdd row[1] extraction, README.md:2245, R3). The indexer
+    only gives the slot and does not run, so no row is dropped for its
+    truth label and no id join is needed."""
+    out = PipelineModel(model.stages[1:]).transform(df)
+    added = set(out.columns) - set(df.columns)
+    return out.withColumn(
+        prob_col, vector_to_array(F.col("probability"))[attack_slot(model)]
+    ).drop(*added)
 
 
 def instance_weights(

@@ -9,9 +9,13 @@ fits one [StringIndexer, classifier] pipeline per modeled cluster
 cluster the fits run concurrently on a thread pool, which replaces the
 reference's serial driver loop while the data stays distributed.
 
-Probability remap (D5): each cluster's own StringIndexer decides which
-probability-vector slot means "attack" (``classify.attack_probability``)
-— vector_to_array, no Python UDF.
+``score_clusters`` scores in one pass over one frame: every modeled
+cluster's classifier runs in the same projection, and one ``CASE`` on
+the cluster picks each row's score, so the test lineage is read once,
+with no per-cluster filter, union or id join. Probability remap (D5):
+each cluster's own StringIndexer decides which probability-vector slot
+means "attack" (``classify.attack_slot``) — vector_to_array, no Python
+UDF.
 """
 
 from __future__ import annotations
@@ -21,11 +25,11 @@ from dataclasses import dataclass, field
 
 from pyspark.ml import PipelineModel
 from pyspark.ml.clustering import GaussianMixture, KMeans
+from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nsl_kdd_spark.ml.classify import DEFAULT_SEED, attack_probability, train_binary_classifier
-from nsl_kdd_spark.operators.joins import union_by_name
+from nsl_kdd_spark.ml.classify import DEFAULT_SEED, attack_slot, train_binary_classifier
 
 
 def kmeans_assign(
@@ -131,24 +135,29 @@ def score_clusters(
     split: ClusterSplit,
     models: dict[int, PipelineModel],
     prob_col: str,
-    id_col: str = "id",
     cluster_col: str = "cluster",
 ) -> DataFrame:
-    """(id, prob) for every row: mapped clusters via a literal map
-    expression, modeled clusters via their pipeline's probability
-    vector (attack slot picked per model) — M15 without the Python
-    UDFs or the empty-DF seed union (README.md:1667-1687)."""
-    parts: list[DataFrame] = []
-    if split.mapping:
-        mapping_expr = F.create_map(
-            *[F.lit(x) for kv in split.mapping.items() for x in kv]
-        )
-        parts.append(
-            df.filter(F.col(cluster_col).isin(list(split.mapping)))
-            .select(F.col(id_col), mapping_expr[F.col(cluster_col)].alias(prob_col))
-        )
+    """``df`` plus ``prob_col`` for every row, in one pass over the one
+    frame (M15, README.md:1667-1687): each modeled cluster's classifier
+    stage writes a temporary probability column, and one ``CASE`` on
+    ``cluster_col`` picks the row's cluster's attack slot or a mapped
+    cluster's hard probability. A cluster in neither (it got no train
+    row, e.g. a GaussianMixture component that wins none) takes the
+    split rule's outlier case, 1.0 (attack), so no row is dropped; nor
+    is any filtered on its truth label, as the indexers do not run."""
+    out, branches = df, []
     for k, model in models.items():
-        parts.append(
-            attack_probability(model, df.filter(F.col(cluster_col) == k), prob_col, id_col)
-        )
-    return union_by_name(parts)
+        clf, tmp = model.stages[-1], f"_prob_{k}"
+        out = clf.transform(out, {
+            clf.probabilityCol: tmp, clf.rawPredictionCol: "", clf.predictionCol: "",
+        })
+        branches.append((k, vector_to_array(F.col(tmp))[attack_slot(model)]))
+    branches += [(k, F.lit(p)) for k, p in split.mapping.items()]
+    prob = None
+    for k, val in branches:
+        hit = F.col(cluster_col) == k
+        prob = F.when(hit, val) if prob is None else prob.when(hit, val)
+    prob = F.lit(1.0) if prob is None else prob.otherwise(1.0)
+    # no filter on the result: Catalyst would push the cluster and
+    # classifier UDFs into it and evaluate them twice
+    return out.withColumn(prob_col, prob).drop(*[f"_prob_{k}" for k in models])

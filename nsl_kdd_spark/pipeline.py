@@ -101,8 +101,14 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     # ids assigned once on the cached table (SURVEY §4.3: never let
     # monotonically_increasing_id recompute over uncached lineage)
     train = with_deterministic_id(train, "id").cache()
-    test = with_deterministic_id(test, "id").cache()
-    return NslPrepared(train=train, test=test)
+    test = with_deterministic_id(test, "id")
+    # test rows are only scored row by row, so spreading them over the
+    # cores changes only row order; train stays as read (RF bootstraps
+    # follow it). AQE would coalesce an unnumbered repartition to one.
+    cores = spark.sparkContext.defaultParallelism
+    if test.rdd.getNumPartitions() < cores:
+        test = test.repartition(cores, "id")
+    return NslPrepared(train=train, test=test.cache())
 
 
 def build_features(
@@ -180,12 +186,11 @@ def _category_model(train_v: DataFrame, cats: tuple[str, ...], cfg: NslConfig):
     return train_binary_classifier(sub, _rf(cfg))
 
 
-def _decide(base: DataFrame, probs: DataFrame, cfg: NslConfig) -> DataFrame:
-    """(id, labels2, ...) joined with (id, prob), plus the thresholded
-    prediction ``pred`` and the 0/1 truth ``y``."""
+def _decide(scored: DataFrame, cfg: NslConfig) -> DataFrame:
+    """(id, labels2, ..., prob) plus the thresholded prediction ``pred``
+    and the 0/1 truth ``y``."""
     return (
-        base.join(probs, on="id")
-        .withColumn("pred", thr(F.col("prob"), cfg.threshold))
+        scored.withColumn("pred", thr(F.col("prob"), cfg.threshold))
         .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
     )
 
@@ -199,7 +204,7 @@ def _cluster_rf(
     test_c = model.transform(test_v)
     split, models = _cluster_models(train_c, cfg)
     probs = score_clusters(test_c.cache(), split, models, prob_col="prob")
-    scored = _decide(test_c.select("id", "labels2"), probs, cfg)
+    scored = _decide(probs.select("id", "labels2", "prob"), cfg)
     return {"scored": scored, "metrics": binary_metrics(scored, "y", "pred")}
 
 
@@ -233,7 +238,7 @@ def category_rf(
     # category-vs-normal slice (README.md:2332 filters the test set to
     # normal + the category before its e=0.5 report) as well as the
     # full-test labels2 view
-    scored = _decide(test_v.select("id", "labels2", "labels5"), probs, cfg)
+    scored = _decide(probs.select("id", "labels2", "labels5", "prob"), cfg)
     subset = scored.filter(F.col("labels5").isin("normal", *cats))
     return {
         "scored": scored,
@@ -302,12 +307,16 @@ def nsl_ensemble(
         split, models = _cluster_models(fit_c.cache(), cfg)
         return tuple(
             score_clusters(model.transform(v).cache(), split, models, prob_col="prob")
+            .select("id", "prob")
             for v in (cv_v, test_v)
         )
 
     def category_family(cats: tuple[str, ...]) -> tuple[DataFrame, DataFrame]:
         model = _category_model(fit_v, cats, cfg)
-        return tuple(attack_probability(model, v, prob_col="prob") for v in (cv_v, test_v))
+        return tuple(
+            attack_probability(model, v, prob_col="prob").select("id", "prob")
+            for v in (cv_v, test_v)
+        )
 
     prob_cols = ["p_km", "p_gm", "p_dos", "p_probe", "p_r2l"]
     families = [
@@ -332,9 +341,8 @@ def nsl_ensemble(
     decided = combine_scores(
         test_tbl, prob_cols, weights=[3.0, 1.0, 1.0, 1.0, 1.0], threshold=cfg.threshold
     )
-    decided = (
-        decided.join(attack_probability(stacker, decided, "p_stack"), on="id")
-        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
+    decided = attack_probability(stacker, decided, "p_stack").withColumn(
+        "y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0)
     )
     strategies = {
         "kmeans_rf": F.col("p_km_pred"),

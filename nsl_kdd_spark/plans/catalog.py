@@ -1398,14 +1398,9 @@ def q39_rf_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from nsl_kdd_spark.ml.classify import attack_probability
 
-    probs = attack_probability(model, test, prob_col="prob", id_col="vec_id")
-    scored = (
-        test.select("vec_id", "labels2")
-        .join(probs, on="vec_id")
-        .select(
-            F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0).alias("y"),
-            F.when(F.col("prob") >= 0.5, 1.0).otherwise(0.0).alias("p"),
-        )
+    scored = attack_probability(model, test, prob_col="prob").select(
+        F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0).alias("y"),
+        F.when(F.col("prob") >= 0.5, 1.0).otherwise(0.0).alias("p"),
     )
     return binary_metrics(scored, "y", "p")
 
@@ -1414,7 +1409,8 @@ def q39_rf_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q40_cluster_then_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature architecture (M12+R2+M14+M15) on the
     embeddings table: KMeans partitions, cluster-split rule, per-cluster
-    RFs trained concurrently, union-assembled scores."""
+    RFs trained concurrently, every row scored in one pass (one CASE on
+    the cluster picks its cluster's model)."""
     from pyspark.ml.functions import array_to_vector
 
     from nsl_kdd_spark.ml.classify import make_rf
@@ -1439,14 +1435,9 @@ def q40_cluster_then_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned, split,
         lambda: make_rf(num_trees=40, max_depth=8, features_col="features"),
     )
-    probs = score_clusters(assigned, split, models, prob_col="prob")
-    scored = (
-        assigned.select("id", "labels2")
-        .join(probs, on="id")
-        .select(
-            F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0).alias("y"),
-            F.when(F.col("prob") >= 0.5, 1.0).otherwise(0.0).alias("p"),
-        )
+    scored = score_clusters(assigned, split, models, prob_col="prob").select(
+        F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0).alias("y"),
+        F.when(F.col("prob") >= 0.5, 1.0).otherwise(0.0).alias("p"),
     )
     return binary_metrics(scored, "y", "p")
 

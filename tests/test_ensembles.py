@@ -56,8 +56,10 @@ def test_lr_stacker_and_rf_ensembler(spark):
     df = instance_weights(_scores(spark), "labels2",
                           {"normal": 1.0, "attack": 100.0})
     lr = train_lr_stacker(df, ["p_a", "p_b", "p_c"])
-    lr_probs = attack_probability(lr, df, "lr_prob")
-    joined = df.join(lr_probs, on="id")
+    joined = attack_probability(lr, df, "lr_prob")
+    # the input's columns plus the probability, on the input's rows
+    assert joined.columns == df.columns + ["lr_prob"]
+    assert joined.count() == df.count()
     # separable toy data: stacker must rank attacks above normals
     agg = joined.groupBy("labels2").agg(F.avg("lr_prob").alias("m")).collect()
     means = {r["labels2"]: r["m"] for r in agg}
@@ -66,8 +68,8 @@ def test_lr_stacker_and_rf_ensembler(spark):
     pred_df = combine_scores(df, ["p_a", "p_b", "p_c"])
     rf = train_rf_ensembler(pred_df, ["p_a_pred", "p_b_pred", "p_c_pred"],
                             num_trees=20, max_depth=3)
-    rf_probs = attack_probability(rf, pred_df, "rf_prob")
-    joined = pred_df.join(rf_probs, on="id")
+    joined = attack_probability(rf, pred_df, "rf_prob")
+    assert joined.columns == pred_df.columns + ["rf_prob"]
     agg = joined.groupBy("labels2").agg(F.avg("rf_prob").alias("m")).collect()
     means = {r["labels2"]: r["m"] for r in agg}
     assert means["attack"] > means["normal"]

@@ -28,6 +28,8 @@ from nsl_kdd_spark.pipeline import (
     prepare,
 )
 from nsl_kdd_spark.schema import nsl_kdd_roles
+from nsl_kdd_spark.sources.csv import load_nsl_kdd
+from tests.test_plan_quality import plan_of
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
@@ -67,15 +69,23 @@ def nsl_files(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def runs(spark, nsl_files):
-    """Two kmeans_rf runs in one session: (scored rows, (tn, fp, fn, tp))."""
+def kmeans_runs(spark, nsl_files):
+    """Two kmeans_rf runs in one session: ``runs`` holds (scored rows,
+    (tn, fp, fn, tp)) per run, ``plan`` the formatted plan of the first
+    run's metrics, taken before anything runs."""
     train, test, _, _ = nsl_files
-    out = []
+    out, plans = [], []
     for _ in range(2):
         res = kmeans_rf(spark, train, test, CFG)
+        plans.append(plan_of(res["metrics"]))
         out.append((res["scored"].count(), _cm(res["metrics"])))
         spark.catalog.clearCache()
-    return out
+    return {"runs": out, "plan": plans[0]}
+
+
+@pytest.fixture(scope="module")
+def runs(kmeans_runs):
+    return kmeans_runs["runs"]
 
 
 def test_kmeans_rf_scores_every_test_row(runs):
@@ -96,6 +106,18 @@ def test_kmeans_rf_deterministic_in_session(runs):
 
 def test_kmeans_rf_confusion_matrix_pinned(runs):
     assert runs[0][1] == KMEANS_CM
+
+
+def test_kmeans_rf_scores_in_one_pass(kmeans_runs, nsl_files):
+    """The score plan reads the test file once and scores it in place:
+    no per-cluster union, no join back on the row id."""
+    plan = kmeans_runs["plan"]
+    tree = plan.split("\n\n")[0]      # the operator tree, before the details
+    assert tree.count("Scan csv") == 1, tree
+    locations = [ln for ln in plan.splitlines() if ln.startswith("Location:")]
+    assert len(locations) == 1 and nsl_files[1] in locations[0], locations
+    for node in ("Union", "BroadcastHashJoin", "SortMergeJoin"):
+        assert node not in plan, tree
 
 
 def test_gaussian_rf(spark, nsl_files):
@@ -160,6 +182,11 @@ def test_prepare_repairs_generated(spark, nsl_files):
             assert df.count() == rows
             assert df.filter(F.col("su_attempted") == 2.0).count() == 0
             assert "num_outbound_cmds" not in df.columns
+        # the test rows are spread over the cores; train keeps the
+        # partitions it was read with (RF bootstraps follow them)
+        assert prepared.test.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        train_parts = load_nsl_kdd(spark, train).rdd.getNumPartitions()
+        assert prepared.train.rdd.getNumPartitions() == train_parts
     finally:
         spark.catalog.clearCache()
 
