@@ -17,7 +17,7 @@ from pyspark.ml.feature import PCA, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nsl_kdd_spark.functions.scalar import exact_avg, exact_stddev, zscore
+from nsl_kdd_spark.functions.scalar import zscore
 from nsl_kdd_spark.operators.relational import one_hot
 
 
@@ -37,19 +37,14 @@ class StandardizerModel:
         })
 
 
-def fit_standardizer(
-    df: DataFrame, columns: Sequence[str], exact_scale: int | None = 2
-) -> StandardizerModel:
+def fit_standardizer(df: DataFrame, columns: Sequence[str]) -> StandardizerModel:
     """One aggregation job for all columns (the reference runs the
-    same shape; README.md:1323-1324). Fit on train, apply to train/cv/
-    test — never refit per split."""
+    same shape; README.md:1323-1324): ``avg`` and sample ``stddev`` in
+    doubles. Fit on train, apply to train/cv/test — never refit per
+    split."""
     aggs = []
     for c in columns:
-        if exact_scale is not None:
-            aggs += [exact_avg(c, exact_scale).alias(f"__m_{c}"),
-                     exact_stddev(c, exact_scale).alias(f"__s_{c}")]
-        else:
-            aggs += [F.avg(c).alias(f"__m_{c}"), F.stddev(c).alias(f"__s_{c}")]
+        aggs += [F.avg(c).alias(f"__m_{c}"), F.stddev(c).alias(f"__s_{c}")]
     row = df.agg(*aggs).first()
     return StandardizerModel(
         means={c: float(row[f"__m_{c}"]) for c in columns},

@@ -64,34 +64,6 @@ def describe_stats(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     )
 
 
-def distinct_count(df: DataFrame, column: str, approx: bool = False) -> DataFrame:
-    """Cardinality probe (A4, README.md:372). ``approx=True`` swaps in
-    HyperLogLog++ — the 100 TB default; exact needs a full shuffle."""
-    agg = (
-        F.approx_count_distinct(column) if approx else F.countDistinct(column)
-    ).alias("n_distinct")
-    return df.agg(agg)
-
-
-def global_stats(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """Multi-column one-row avg+stddev (A5/A6, README.md:1147,1323-1324):
-    feeds the z-score standardizer without a per-column job."""
-    aggs = []
-    for c in columns:
-        aggs.append(F.avg(c).alias(f"avg_{c}"))
-        aggs.append(F.stddev(c).alias(f"stddev_{c}"))
-    return df.agg(*aggs)
-
-
-def grouped_avg(df: DataFrame, label_col: str, columns: Sequence[str]) -> DataFrame:
-    """``groupBy(label).avg(cols)`` (A7, README.md:1153)."""
-    return (
-        df.groupBy(label_col)
-        .agg(*[F.avg(c).alias(f"avg_{c}") for c in columns])
-        .orderBy(label_col)
-    )
-
-
 def histogram(
     df: DataFrame, column: str, lo: float, hi: float, n_bins: int
 ) -> DataFrame:

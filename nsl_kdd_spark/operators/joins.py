@@ -1,10 +1,12 @@
 """Join operators (SURVEY.md §2.3).
 
 The reference's only join shape is the inner equi-join on a synthetic
-``id`` used ~12x for result assembly (README.md:1712). The engine
-exposes that plus the standard relational family Spark gives for free
-(semi/anti/outer), with explicit broadcast control for small
-dimensions — the knob that matters at 100 TB.
+``id`` used ~12x for result assembly (README.md:1712). The engine needs
+none of it: its paper flows add each model's probability as a column
+of the frame they score (``pipeline.nsl_ensemble``). What stays is the
+standard relational family Spark gives for free (equi/semi/anti/outer),
+with explicit broadcast control for small dimensions, and the n-way
+union.
 """
 
 from __future__ import annotations
@@ -42,15 +44,6 @@ def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> Dat
 def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """NOT EXISTS: rows of ``left`` without a match."""
     return left.join(right, on=on, how="left_anti")
-
-
-def assemble(base: DataFrame, parts: Sequence[DataFrame], on: str = "id") -> DataFrame:
-    """Result assembly (J1): fold score tables onto ``base`` by key.
-
-    The reference re-joins and re-caches per model family
-    (README.md:1712,1926,2245,...); folding in one expression lets AQE
-    plan the whole chain (each probs table is tiny -> broadcast)."""
-    return reduce(lambda acc, p: acc.join(p, on=on, how="inner"), parts, base)
 
 
 def union_by_name(parts: Sequence[DataFrame]) -> DataFrame:

@@ -11,15 +11,6 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
-
-
-def cast_columns(df: DataFrame, casts: Mapping[str, DataType | str]) -> DataFrame:
-    """Wide cast-projection (reference README.md:116-158, P1): one
-    ``select`` so the optimizer sees a single Project node."""
-    return df.select(
-        *[F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c) for c in df.columns]
-    )
 
 
 def replace_values(
@@ -32,13 +23,6 @@ def replace_values(
     for old, new in mapping.items():
         expr = F.when(F.col(column) == F.lit(old), F.lit(new)).otherwise(expr)
     return df.withColumn(column, expr)
-
-
-def fill_nulls(df: DataFrame, value: object, subset: Sequence[str] | None = None) -> DataFrame:
-    """Null repair (README.md:1156,1164, P10). The reference uses a
-    1000.0 sentinel for division-by-zero; callers pair this with
-    ``F.try_divide``-style safe math."""
-    return df.fillna(value, subset=list(subset) if subset is not None else None)
 
 
 def drop_constant_columns(df: DataFrame, candidates: Sequence[str]) -> DataFrame:

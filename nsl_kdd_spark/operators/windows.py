@@ -13,12 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k_global(df: DataFrame, k: int, *order: Column) -> DataFrame:
-    """``orderBy(...).limit(k)`` — Spark executes as TakeOrdered
-    (per-partition top-k + merge), never a full global sort."""
-    return df.orderBy(*order).limit(k)
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_by: Sequence[str],
@@ -33,16 +27,3 @@ def top_k_per_group(
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def with_lag(
-    df: DataFrame,
-    column: str,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    offset: int = 1,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Analytic lag — the building block for sessionization gaps."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(out_col or f"{column}_lag{offset}", F.lag(column, offset).over(w))

@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.ml import PipelineModel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import hard_vote_or, soft_vote
@@ -48,7 +48,6 @@ from nsl_kdd_spark.ml.features import (
 )
 from nsl_kdd_spark.ml.labels import with_labels
 from nsl_kdd_spark.ml.metrics import binary_metrics
-from nsl_kdd_spark.operators.joins import assemble as join_assemble
 from nsl_kdd_spark.operators.relational import (
     drop_constant_columns,
     replace_values,
@@ -84,7 +83,10 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     2.0 -> 0.0; constant columns dropped (num_outbound_cmds). Labels:
     labels2 regex + labels5 taxonomy map (strict=False for test files
     with unseen attack names — the reference instead extends its dict;
-    unseen -> null -> filterable). id: deterministic row_number.
+    unseen -> null -> filterable). id: ``monotonically_increasing_id``,
+    a row label only: every flow scores onto the frame it has, so no
+    flow joins on ``id``. Train is cached (every fit reads it); test is
+    not, as each flow caches the scored frame it builds on it.
     """
     roles = nsl_kdd_roles()
     mapping = attack_mapping()
@@ -98,8 +100,6 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     test = _prep(load_nsl_kdd(spark, test_path))
     train = drop_constant_columns(train, list(roles.numeric))
     test = test.select(*train.columns)
-    # ids assigned once on the cached table (SURVEY §4.3: never let
-    # monotonically_increasing_id recompute over uncached lineage)
     train = with_deterministic_id(train, "id").cache()
     test = with_deterministic_id(test, "id")
     # test rows are only scored row by row, so spreading them over the
@@ -108,7 +108,7 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     cores = spark.sparkContext.defaultParallelism
     if test.rdd.getNumPartitions() < cores:
         test = test.repartition(cores, "id")
-    return NslPrepared(train=train, test=test.cache())
+    return NslPrepared(train=train, test=test)
 
 
 def build_features(
@@ -128,7 +128,7 @@ def build_features(
     keep_binary = [c for c in select_features(ar_rows, cfg.min_ar_binary) if c in binary]
 
     cats = {c: fit_categories(prepared.train, c) for c in roles.nominal}
-    scaler = fit_standardizer(prepared.train, keep_numeric, exact_scale=None)
+    scaler = fit_standardizer(prepared.train, keep_numeric)
 
     def _feats(df: DataFrame) -> DataFrame:
         df = one_hot_encode(df, roles.nominal, cats, drop_input=False)
@@ -186,12 +186,17 @@ def _category_model(train_v: DataFrame, cats: tuple[str, ...], cfg: NslConfig):
     return train_binary_classifier(sub, _rf(cfg))
 
 
+def _truth() -> Column:
+    """The 0/1 truth ``y``: 1.0 for an attack row."""
+    return F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0)
+
+
 def _decide(scored: DataFrame, cfg: NslConfig) -> DataFrame:
     """(id, labels2, ..., prob) plus the thresholded prediction ``pred``
     and the 0/1 truth ``y``."""
     return (
         scored.withColumn("pred", thr(F.col("prob"), cfg.threshold))
-        .withColumn("y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0))
+        .withColumn("y", _truth())
     )
 
 
@@ -292,48 +297,40 @@ def nsl_ensemble(
     tables for the test set.
 
     Features/vectors are built ONCE and shared across all five model
-    families (the reference re-prepares per section); every prob table
-    is (id, prob) joined back broadcast-style (J1 assembly)."""
+    families (the reference re-prepares per section). Each split is
+    scored in one chain: every family adds its probability column to
+    the frame it is given, so the five scores end up side by side with
+    no id join (the reference's J1 assembly re-joins five (id, prob)
+    tables on a ``monotonically_increasing_id``)."""
     cfg = cfg or NslConfig()
     full_v, test_v = _vectors(spark, train_path, test_path, cfg)
-    test_v = test_v.cache()
+    # cached so randomSplit samples the same rows for both halves
     fit_v, cv_v = full_v.cache().randomSplit([0.8, 0.2], seed=cfg.seed)
     fit_v = fit_v.cache()
-    cv_v = cv_v.cache()
 
-    def cluster_family(assign) -> tuple[DataFrame, DataFrame]:
-        """fit on fit_v, score cv_v and test_v -> (cv probs, test probs)."""
+    def cluster_family(assign):
+        """fit on fit_v: (cluster model, split, per-cluster models)."""
         model, fit_c = assign(fit_v, cfg)
-        split, models = _cluster_models(fit_c.cache(), cfg)
-        return tuple(
-            score_clusters(model.transform(v).cache(), split, models, prob_col="prob")
-            .select("id", "prob")
-            for v in (cv_v, test_v)
-        )
+        return (model, *_cluster_models(fit_c.cache(), cfg))
 
-    def category_family(cats: tuple[str, ...]) -> tuple[DataFrame, DataFrame]:
-        model = _category_model(fit_v, cats, cfg)
-        return tuple(
-            attack_probability(model, v, prob_col="prob").select("id", "prob")
-            for v in (cv_v, test_v)
-        )
-
-    prob_cols = ["p_km", "p_gm", "p_dos", "p_probe", "p_r2l"]
-    families = [
-        cluster_family(_km_assign),
-        cluster_family(_gm_assign),
-        category_family(("DoS",)),
-        category_family(("Probe",)),
-        category_family(("R2L", "U2R")),
+    clusters = [cluster_family(_km_assign), cluster_family(_gm_assign)]
+    categories = [
+        _category_model(fit_v, cats, cfg) for cats in (("DoS",), ("Probe",), ("R2L", "U2R"))
     ]
+    prob_cols = ["p_km", "p_gm", "p_dos", "p_probe", "p_r2l"]
 
-    def assemble_probs(base: DataFrame, probs) -> DataFrame:
-        named = [p.withColumnRenamed("prob", name) for p, name in zip(probs, prob_cols)]
-        return join_assemble(base.select("id", "labels2"), named, on="id")
+    def score(v: DataFrame) -> DataFrame:
+        """(id, labels2) plus one probability column per family."""
+        out = v.select("id", "labels2", "raw_features")
+        for (model, split, models), col in zip(clusters, prob_cols):
+            out = score_clusters(model.transform(out), split, models, col).drop(
+                "cluster", "pca_features", "cluster_probability"
+            )
+        for model, col in zip(categories, prob_cols[2:]):
+            out = attack_probability(model, out, col)
+        return out.drop("raw_features").cache()
 
-    cv_tbl = assemble_probs(cv_v, [cv for cv, _ in families]).cache()
-    test_tbl = assemble_probs(test_v, [test for _, test in families]).cache()
-
+    cv_tbl, test_tbl = score(cv_v), score(test_v)
     stacker = train_lr_stacker(
         instance_weights(cv_tbl, "labels2", {"normal": 1.0, "attack": 100.0}),
         prob_cols,
@@ -341,9 +338,7 @@ def nsl_ensemble(
     decided = combine_scores(
         test_tbl, prob_cols, weights=[3.0, 1.0, 1.0, 1.0, 1.0], threshold=cfg.threshold
     )
-    decided = attack_probability(stacker, decided, "p_stack").withColumn(
-        "y", F.when(F.col("labels2") == "attack", 1.0).otherwise(0.0)
-    )
+    decided = attack_probability(stacker, decided, "p_stack").withColumn("y", _truth())
     strategies = {
         "kmeans_rf": F.col("p_km_pred"),
         "blend": F.col("blend_pred"),

@@ -28,38 +28,15 @@ rows are identical.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from nsl_kdd_spark.operators.quality import psi_drift, psi_drift_categorical
-from nsl_kdd_spark.streaming.ingest import _write_partition
-
-
-def _start_drop_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType | str,
-    source_format: str,
-    sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-):
-    """Shared availableNow foreachBatch starter for the drift
-    monitors (one reader/trigger wiring, not one per variant)."""
-    reader = spark.readStream.schema(schema)
-    stream = (
-        reader.parquet(source_dir)
-        if source_format == "parquet"
-        else reader.format(source_format).load(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+from nsl_kdd_spark.streaming.ingest import _write_partition, start_drop_stream
 
 
 def _drift_sink(
@@ -124,18 +101,13 @@ def monitor_drift_stream(
     per-batch drift number is ``SUM(psi_u) GROUP BY batch_id`` —
     PSI < 0.1e6 stable, 0.1e6-0.25e6 moderate, > 0.25e6 action (the
     classic thresholds in the monitor's micro-units)."""
-    base = baseline.select(F.col(value_col))
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _drift_sink(
-            batch_df, batch_id,
-            baseline=base, value_col=value_col, out_path=out_path,
-            lo=lo, hi=hi, n_bins=n_bins, scale=scale,
-        )
-
-    return _start_drop_stream(
-        spark, source_dir, schema, source_format, sink, checkpoint_dir
+    sink = partial(
+        _drift_sink,
+        baseline=baseline.select(F.col(value_col)), value_col=value_col,
+        out_path=out_path, lo=lo, hi=hi, n_bins=n_bins, scale=scale,
     )
+    stream = spark.readStream.schema(schema).format(source_format).load(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)
 
 
 def monitor_drift_stream_categorical(
@@ -156,18 +128,13 @@ def monitor_drift_stream_categorical(
     landing in the same exactly-once ``__batch_id`` layout. The
     class-mix shift monitor (event types, predicted labels, routing
     buckets)."""
-    base = baseline.select(F.col(cat_col))
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _drift_sink_categorical(
-            batch_df, batch_id,
-            baseline=base, cat_col=cat_col, categories=categories,
-            out_path=out_path, scale=scale,
-        )
-
-    return _start_drop_stream(
-        spark, source_dir, schema, source_format, sink, checkpoint_dir
+    sink = partial(
+        _drift_sink_categorical,
+        baseline=baseline.select(F.col(cat_col)), cat_col=cat_col,
+        categories=categories, out_path=out_path, scale=scale,
     )
+    stream = spark.readStream.schema(schema).format(source_format).load(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)
 
 
 def read_drift_reports(spark: SparkSession, out_path: str) -> DataFrame:

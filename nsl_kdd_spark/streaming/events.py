@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nsl_kdd_spark.streaming.ingest import _write_partition, start_drop_stream
+
 
 def _maybe_watermark(df: DataFrame, ts_col: str, watermark: str | None) -> DataFrame:
     if watermark is not None and df.isStreaming:
@@ -201,23 +203,9 @@ def write_stream_foreach_batch(
     fans out to multi-sink / merge targets. Returns the started query
     (availableNow trigger: drains the source, then stops)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # dynamic overwrite scoped to THIS write via the writer option
-        # — mutating the session conf races across concurrent streams
-        # (round-5 review; see ingest._write_partition)
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
-
-    return (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_drop_stream(
+        df, lambda batch_df, batch_id: _write_partition(batch_df, path, batch_id),
+        checkpoint_dir,
     )
 
 

@@ -29,6 +29,9 @@ does not.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -203,6 +206,24 @@ def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
     )
 
 
+def start_drop_stream(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+):
+    """Start ``stream`` with ``sink(batch_df, batch_id)`` run on every
+    micro-batch (foreachBatch), its progress in ``checkpoint_dir``, on
+    the availableNow trigger: the query drains what the source holds,
+    then stops. Returns the started StreamingQuery. The one starter of
+    every drop-directory stream (ingest, drift monitors, event sink)."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def read_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Corpus/registry tables written by the ingest stream, with the
     bookkeeping partition column dropped."""
@@ -291,22 +312,12 @@ def ingest_documents_stream(
     per-batch cost is O(batch x collision rate) regardless of corpus
     age."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _document_sink(
-            batch_df, batch_id,
-            corpus_path=corpus_path, registry_path=registry_path,
-            id_col=id_col, text_col=text_col,
-            num_hashes=num_hashes, band_size=band_size,
-            threshold=threshold, shingle_n=shingle_n,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .json(source_dir)
+    sink = partial(
+        _document_sink,
+        corpus_path=corpus_path, registry_path=registry_path,
+        id_col=id_col, text_col=text_col,
+        num_hashes=num_hashes, band_size=band_size,
+        threshold=threshold, shingle_n=shingle_n,
     )
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = spark.readStream.schema(schema).json(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)

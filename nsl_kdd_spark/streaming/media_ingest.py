@@ -30,6 +30,7 @@ only A — same conservative contract as the text ingest's self-tier.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +45,7 @@ from nsl_kdd_spark.streaming.ingest import (
     _probe_or_empty,
     _write_partition,
     _write_registry_partition,
+    start_drop_stream,
 )
 
 _SIG_SCHEMA = StructType([
@@ -176,18 +178,11 @@ def ingest_media_stream(
 
     from nsl_kdd_spark.multimodal.binary import MEDIA_SCHEMA
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _media_sink(
-            batch_df, batch_id,
-            corpus_path=corpus_path, registry_path=registry_path,
-            max_hamming=max_hamming, bands=bands,
-            hash_fn=hash_fn, on_error=on_error, bits=bits,
-        )
-
-    stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sink = partial(
+        _media_sink,
+        corpus_path=corpus_path, registry_path=registry_path,
+        max_hamming=max_hamming, bands=bands,
+        hash_fn=hash_fn, on_error=on_error, bits=bits,
     )
+    stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)

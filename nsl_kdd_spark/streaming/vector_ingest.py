@@ -36,6 +36,8 @@ as the text and media ingests.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -58,6 +60,7 @@ from nsl_kdd_spark.streaming.ingest import (
     _probe_or_empty,
     _write_partition,
     _write_registry_partition,
+    start_drop_stream,
 )
 
 VECTOR_SCHEMA = StructType([
@@ -237,18 +240,11 @@ def ingest_vector_stream(
             f"n_probe must be in [1, 2^n_planes], got {n_probe}"
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _vector_sink(
-            batch_df, batch_id,
-            corpus_path=corpus_path, registry_path=registry_path,
-            threshold=threshold, dim=dim, n_planes=n_planes,
-            n_probe=n_probe, seed=seed,
-        )
-
-    stream = spark.readStream.schema(VECTOR_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sink = partial(
+        _vector_sink,
+        corpus_path=corpus_path, registry_path=registry_path,
+        threshold=threshold, dim=dim, n_planes=n_planes,
+        n_probe=n_probe, seed=seed,
     )
+    stream = spark.readStream.schema(VECTOR_SCHEMA).parquet(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)

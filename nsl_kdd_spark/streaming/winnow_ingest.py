@@ -36,6 +36,7 @@ bounded by per-fp document frequency, never a corpus self-join.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +50,7 @@ from nsl_kdd_spark.streaming.ingest import (
     _probe_or_empty,
     _write_partition,
     _write_registry_partition,
+    start_drop_stream,
 )
 
 DOC_SCHEMA = StructType([
@@ -229,17 +231,10 @@ def ingest_winnow_stream(
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _winnow_sink(
-            batch_df, batch_id,
-            corpus_path=corpus_path, registry_path=registry_path,
-            k=k, w=w, min_shared=min_shared, max_fp_df=max_fp_df,
-        )
-
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sink = partial(
+        _winnow_sink,
+        corpus_path=corpus_path, registry_path=registry_path,
+        k=k, w=w, min_shared=min_shared, max_fp_df=max_fp_df,
     )
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
+    return start_drop_stream(stream, sink, checkpoint_dir)

@@ -1,4 +1,4 @@
-"""ml.features layer: standardizer exactness, OHE vocabularies, the
+"""ml.features layer: the standardizer, OHE vocabularies, the
 assembler feeding PCA (M4-M10)."""
 
 from __future__ import annotations

@@ -110,10 +110,12 @@ def test_kmeans_rf_confusion_matrix_pinned(runs):
 
 def test_kmeans_rf_scores_in_one_pass(kmeans_runs, nsl_files):
     """The score plan reads the test file once and scores it in place:
-    no per-cluster union, no join back on the row id."""
+    no per-cluster union, no join back on the row id, and one cached
+    frame (the assigned test rows), not a cache nested in another."""
     plan = kmeans_runs["plan"]
     tree = plan.split("\n\n")[0]      # the operator tree, before the details
     assert tree.count("Scan csv") == 1, tree
+    assert tree.count("InMemoryRelation") == 1, tree
     locations = [ln for ln in plan.splitlines() if ln.startswith("Location:")]
     assert len(locations) == 1 and nsl_files[1] in locations[0], locations
     for node in ("Union", "BroadcastHashJoin", "SortMergeJoin"):
@@ -162,6 +164,7 @@ def test_nsl_ensemble(spark, nsl_files):
     train, test, _, test_truth = nsl_files
     try:
         res = nsl_ensemble(spark, train, test, CFG)
+        plan = plan_of(res["metrics"]["blend"])
         rows = res["scored"].count()
         cms = {name: _cm(m) for name, m in res["metrics"].items()}
     finally:
@@ -171,6 +174,9 @@ def test_nsl_ensemble(spark, nsl_files):
         assert tn + fp + fn + tp == N_TEST
         assert tp + fn == test_truth.attacks
     assert cms == ENSEMBLE_CMS
+    # the five families' scores are columns of one frame, not joined
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
+        assert node not in plan, plan.split("\n\n")[0]
 
 
 def test_prepare_repairs_generated(spark, nsl_files):
@@ -211,7 +217,7 @@ def _deterministic_stages(spark, train, test, conf: dict[str, str]) -> dict:
             prepared.train, numeric_cols=numeric, binary_cols=binary,
             label_col="labels5", exact_scale=None,
         ).collect()
-        scaler = fit_standardizer(prepared.train, numeric, exact_scale=None)
+        scaler = fit_standardizer(prepared.train, numeric)
         train_f, _, feature_cols = build_features(prepared, CFG)
         _, assigned = kmeans_assign(
             assemble(train_f, feature_cols), "raw_features", k=CFG.kmeans_k,
