@@ -10,20 +10,26 @@ The reference's custom feature-selection statistic
   division-by-zero sentinel 1000.0 (README.md:1164);
 - missing/NaN ratios -> 0.0 (README.md:1156).
 
-The engine computes all columns in ONE grouped aggregation pass plus a
-tiny final max — two jobs total regardless of column count, vs the
-reference's per-column Python dict assembly. Output is a relational
-(feature, ratio) table, so downstream selection is a filter.
+Two forms, one arithmetic. :func:`attribute_ratio` is the relational
+operator: a grouped pass, a global pass and a final max, returning a
+(feature, ratio) table (five Spark jobs at any column count; catalog
+q23). The pipeline instead scores from the per-class and total rows of
+its one feature-fitting pass (``features.fit_feature_stats``) with
+:func:`attribute_ratio_rows`, which repeats the operator's double
+arithmetic on the driver and returns the rows the operator collects.
+Either way downstream selection is a filter.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import exact_avg, exact_sum, safe_ratio
+from nsl_kdd_spark.ml.features import FeatureStats
 
 
 def attribute_ratio(
@@ -78,6 +84,49 @@ def attribute_ratio(
         .select("s.*")
         .orderBy(F.desc("ratio"), "feature")
     )
+
+
+def _divide(num: float | None, den: float | None) -> float | None:
+    """Spark's double division: null when either side is null or the
+    divisor is 0."""
+    if num is None or den is None or den == 0:
+        return None
+    return num / den
+
+
+def _spark_max(values: Iterable[float | None]) -> float | None:
+    """Spark's ``max`` over doubles: nulls skipped, NaN above every
+    number."""
+    present = [v for v in values if v is not None]
+    return max(present, key=lambda v: (math.isnan(v), v)) if present else None
+
+
+def attribute_ratio_rows(stats: FeatureStats) -> list[Row]:
+    """The rows ``attribute_ratio(..., exact_scale=None).collect()``
+    returns, computed on the driver from ``stats``: numeric class avg
+    over total avg, binary odds ``sum / (count - sum)`` with the
+    operator's default sentinel 1000.0 for a null or zero denominator,
+    the max over classes (a null max -> 0.0), ordered by ratio
+    descending, then feature. The averages, sums and counts are the
+    operator's own aggregates over the same rows, so the ratios are
+    equal to the bit."""
+    ratios = {}
+    for c in stats.numeric:
+        total = stats.total[f"__avg_{c}"]
+        ratios[c] = _spark_max(_divide(r[f"__avg_{c}"], total) for r in stats.classes)
+    for c in stats.binary:
+        odds = []
+        for r in stats.classes:
+            ones = r[f"__sum_{c}"]
+            zeros = None if ones is None else r[f"__n_{c}"] - ones
+            ratio = _divide(ones, zeros)
+            odds.append(1000.0 if ratio is None else ratio)
+        ratios[c] = _spark_max(odds)
+    rows = [Row(feature=c, ratio=0.0 if v is None else v) for c, v in ratios.items()]
+    # descending ratio with NaN first, as Spark sorts; then by name
+    return sorted(rows, key=lambda r: (not math.isnan(r.ratio),
+                                       0.0 if math.isnan(r.ratio) else -r.ratio,
+                                       r.feature))
 
 
 def select_features(ar_rows: list, min_ar: float) -> list[str]:

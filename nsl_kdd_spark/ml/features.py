@@ -1,11 +1,13 @@
 """Feature-engineering operators (SURVEY.md §2.10 M4-M9).
 
 Wraps the pyspark.ml estimators the pipeline uses (VectorAssembler,
-PCA) behind small functions, plus the expression-based standardizer
-and OHE that replace the reference's Python-UDF paths. The reference's
-VectorIndexer/VectorSlicer steps (M8/M9) have no counterpart: feature
-selection happens on columns before assembly, and the tree models
-treat the 0/1 binary dimensions as continuous.
+PCA) behind small functions, plus the one aggregate pass that measures
+everything the pipeline fits on train (attribute-ratio inputs,
+standardiser mean/std, OHE vocabularies) and the expression-based
+standardizer that replaces the reference's Python-UDF path. The
+reference's VectorIndexer/VectorSlicer steps (M8/M9) have no
+counterpart: feature selection happens on columns before assembly, and
+the tree models treat the 0/1 binary dimensions as continuous.
 """
 
 from __future__ import annotations
@@ -14,11 +16,56 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.ml.feature import PCA, VectorAssembler
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import zscore
-from nsl_kdd_spark.operators.relational import one_hot
+
+
+@dataclass(frozen=True)
+class FeatureStats:
+    """One rollup over the label column, collected: per label value
+    (null included) and over all rows, the ``avg`` and sample
+    ``stddev`` of every numeric column, the ``sum`` and ``count`` of
+    every binary column, and the value set of every nominal column.
+    The reference runs each of these as its own pass (README.md:977-995,
+    1058-1061, 1143-1172, 1322-1337)."""
+
+    numeric: tuple[str, ...]
+    binary: tuple[str, ...]
+    classes: tuple[Row, ...]
+    total: Row
+
+    def vocabulary(self, column: str) -> list[str]:
+        """The sorted non-null values of a nominal column: its OHE
+        categories."""
+        return sorted(self.total[f"__set_{column}"])
+
+
+def fit_feature_stats(
+    df: DataFrame,
+    label_col: str,
+    numeric: Sequence[str] = (),
+    binary: Sequence[str] = (),
+    nominal: Sequence[str] = (),
+) -> FeatureStats:
+    """:class:`FeatureStats` of ``df`` in one aggregation over all
+    columns. The total row is the one ``grouping(label_col)`` marks, so
+    a null label stays a class of its own."""
+    aggs = [F.grouping(label_col).alias("__total")]
+    for c in numeric:
+        aggs += [F.avg(c).alias(f"__avg_{c}"), F.stddev(c).alias(f"__std_{c}")]
+    for c in binary:
+        aggs += [F.sum(c).alias(f"__sum_{c}"), F.count(c).alias(f"__n_{c}")]
+    aggs += [F.collect_set(c).alias(f"__set_{c}") for c in nominal]
+    rows = df.rollup(label_col).agg(*aggs).collect()
+    total = [r for r in rows if r["__total"]]
+    if not total:
+        raise ValueError("no rows to fit features on")
+    return FeatureStats(
+        numeric=tuple(numeric), binary=tuple(binary),
+        classes=tuple(r for r in rows if not r["__total"]), total=total[0],
+    )
 
 
 @dataclass(frozen=True)
@@ -30,48 +77,23 @@ class StandardizerModel:
     means: dict[str, float]
     stddevs: dict[str, float]
 
-    def transform(self, df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-        cols = list(columns) if columns is not None else list(self.means)
-        return df.withColumns({
-            c: zscore(c, F.lit(self.means[c]), F.lit(self.stddevs[c])) for c in cols
-        })
+    def expressions(self) -> dict[str, Column]:
+        """column -> its z-score expression; build once, apply to every
+        frame with ``withColumns``."""
+        return {
+            c: zscore(c, F.lit(self.means[c]), F.lit(self.stddevs[c])) for c in self.means
+        }
 
 
-def fit_standardizer(df: DataFrame, columns: Sequence[str]) -> StandardizerModel:
-    """One aggregation job for all columns (the reference runs the
-    same shape; README.md:1323-1324): ``avg`` and sample ``stddev`` in
-    doubles. Fit on train, apply to train/cv/test — never refit per
-    split."""
-    aggs = []
-    for c in columns:
-        aggs += [F.avg(c).alias(f"__m_{c}"), F.stddev(c).alias(f"__s_{c}")]
-    row = df.agg(*aggs).first()
+def fit_standardizer(stats: FeatureStats, columns: Sequence[str]) -> StandardizerModel:
+    """The standardiser of ``columns``: Spark's own double ``avg`` and
+    sample ``stddev`` from the total row of the one pass (the reference
+    runs the same aggregates, README.md:1323-1324). Fit on train, apply
+    to train/cv/test — never refit per split."""
     return StandardizerModel(
-        means={c: float(row[f"__m_{c}"]) for c in columns},
-        stddevs={c: float(row[f"__s_{c}"]) for c in columns},
+        means={c: float(stats.total[f"__avg_{c}"]) for c in columns},
+        stddevs={c: float(stats.total[f"__std_{c}"]) for c in columns},
     )
-
-
-def fit_categories(df: DataFrame, column: str) -> list[str]:
-    """Category vocabulary for OHE, sorted for determinism. The
-    reference collects per-dataset vocabularies (README.md:1058-1061,
-    its §7.4 fidelity quirk); fit on train and reuse for test unless
-    reproducing the reference exactly."""
-    return sorted(r[0] for r in df.select(column).distinct().collect() if r[0] is not None)
-
-
-def one_hot_encode(
-    df: DataFrame,
-    columns: Sequence[str],
-    categories: dict[str, Sequence[str]],
-    drop_input: bool = True,
-) -> DataFrame:
-    """Multi-column OHE via conditional projection (replaces D2's
-    struct UDF, README.md:1052-1078)."""
-    out = df
-    for c in columns:
-        out = one_hot(out, c, categories[c], drop_input=drop_input)
-    return out
 
 
 def assemble(

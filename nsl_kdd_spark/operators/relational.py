@@ -28,14 +28,17 @@ def replace_values(
 def drop_constant_columns(df: DataFrame, candidates: Sequence[str]) -> DataFrame:
     """Data-driven degenerate-column elimination (the reference drops
     ``num_outbound_cmds`` after a crosstab shows one distinct value,
-    README.md:977-995). One pass of ``approx_count_distinct`` over all
-    candidates — O(1) jobs, not one job per column."""
+    README.md:977-995). One aggregate job over all candidates: a column
+    is constant when ``min(c) <=> max(c)``, an exact check (no sketch,
+    no hash collisions) that is null-safe, so a column of nulls, or of
+    nulls and one value, counts as constant. Ordering puts NaN above
+    every number, so a column holding NaN and a number is kept."""
     if not candidates:
         return df
-    counts = df.agg(
-        *[F.approx_count_distinct(c).alias(c) for c in candidates]
+    same = df.agg(
+        *[F.min(c).eqNullSafe(F.max(c)).alias(c) for c in candidates]
     ).first()
-    constant = [c for c in candidates if counts[c] <= 1]
+    constant = [c for c in candidates if same[c]]
     return df.drop(*constant) if constant else df
 
 
@@ -55,26 +58,27 @@ def with_deterministic_id(
     return df.withColumn(id_col, F.monotonically_increasing_id())
 
 
-def one_hot(
-    df: DataFrame,
-    column: str,
-    categories: Sequence[str],
-    prefix: str | None = None,
-    drop_input: bool = False,
-) -> DataFrame:
+def one_hot_columns(column: str, categories: Sequence[str]) -> list[Column]:
     """One-hot as conditional projection (SURVEY.md M4/D2): replaces the
     reference's dict-closure UDF-returning-struct (README.md:1052-1078)
-    with ``when(col==cat, 1.0)`` columns — pure expressions, codegen'd,
-    no Python worker. Category provenance is the caller's decision (the
-    reference's per-dataset vocabularies are its §7.4 fidelity quirk);
-    pass train-side categories for sane train/test alignment."""
-    pref = prefix if prefix is not None else column
-    cols = [
-        F.when(F.col(column) == F.lit(cat), F.lit(1.0)).otherwise(F.lit(0.0)).alias(f"{pref}_{cat}")
+    with one ``when(col == cat, 1.0).otherwise(0.0)`` column per
+    category, named ``<column>_<cat>`` — pure expressions, codegen'd,
+    no Python worker; a value outside ``categories`` is all zeros. One
+    column reference and one pair of literals serve every category, so
+    building the list costs few driver round trips. Category provenance
+    is the caller's decision (the reference's per-dataset vocabularies
+    are its §7.4 fidelity quirk); pass train-side categories for sane
+    train/test alignment."""
+    src, one, zero = F.col(column), F.lit(1.0), F.lit(0.0)
+    return [
+        F.when(src == F.lit(cat), one).otherwise(zero).alias(f"{column}_{cat}")
         for cat in categories
     ]
-    out = df.select("*", *cols)
-    return out.drop(column) if drop_input else out
+
+
+def one_hot(df: DataFrame, column: str, categories: Sequence[str]) -> DataFrame:
+    """``df`` plus the :func:`one_hot_columns` of ``column``."""
+    return df.select("*", *one_hot_columns(column, categories))
 
 
 def unpivot(

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from nsl_kdd_spark.functions.scalar import hard_vote_or, soft_vote
 from nsl_kdd_spark.functions.scalar import threshold as thr
-from nsl_kdd_spark.ml.ar import attribute_ratio, select_features
+from nsl_kdd_spark.ml.ar import attribute_ratio_rows, select_features
 from nsl_kdd_spark.ml.classify import (
     DEFAULT_SEED,
     attack_probability,
@@ -41,15 +41,15 @@ from nsl_kdd_spark.ml.cluster import (
 )
 from nsl_kdd_spark.ml.features import (
     assemble,
-    fit_categories,
+    fit_feature_stats,
     fit_standardizer,
-    one_hot_encode,
     pca_project,
 )
 from nsl_kdd_spark.ml.labels import with_labels
 from nsl_kdd_spark.ml.metrics import binary_metrics
 from nsl_kdd_spark.operators.relational import (
     drop_constant_columns,
+    one_hot_columns,
     replace_values,
     with_deterministic_id,
 )
@@ -80,7 +80,8 @@ def prepare(spark: SparkSession, train_path: str, test_path: str) -> NslPrepared
     """load -> repair -> label -> id, fitted on train only.
 
     Repairs (data-driven, reference README.md:676,993): su_attempted
-    2.0 -> 0.0; constant columns dropped (num_outbound_cmds). Labels:
+    2.0 -> 0.0; constant numeric columns dropped (num_outbound_cmds),
+    found by one exact ``min <=> max`` aggregate over train. Labels:
     labels2 regex + labels5 taxonomy map (strict=False for test files
     with unseen attack names — the reference instead extends its dict;
     unseen -> null -> filterable). id: ``monotonically_increasing_id``,
@@ -115,26 +116,31 @@ def build_features(
     prepared: NslPrepared, cfg: NslConfig
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """AR selection + OHE (train vocabularies) + z-score
-    standardization (train stats), applied to train and test."""
+    standardization (train stats), applied to train and test.
+
+    Everything fitted comes from one aggregate pass over train
+    (``fit_feature_stats``: a rollup over ``labels5``): the
+    attribute-ratio rows, the standardiser's mean/std and the three
+    OHE vocabularies. The OHE and z-score columns are built once and
+    projected onto both frames."""
     roles = nsl_kdd_roles()
     numeric = [c for c in roles.numeric if c in prepared.train.columns]
     binary = [c for c in roles.binary if c in prepared.train.columns]
 
-    ar_rows = attribute_ratio(
-        prepared.train, numeric_cols=numeric, binary_cols=binary,
-        label_col="labels5", exact_scale=None,
-    ).collect()
+    stats = fit_feature_stats(prepared.train, "labels5", numeric, binary, roles.nominal)
+    ar_rows = attribute_ratio_rows(stats)
     keep_numeric = [c for c in select_features(ar_rows, cfg.min_ar_numeric) if c in numeric]
     keep_binary = [c for c in select_features(ar_rows, cfg.min_ar_binary) if c in binary]
+    scaler = fit_standardizer(stats, keep_numeric)
 
-    cats = {c: fit_categories(prepared.train, c) for c in roles.nominal}
-    scaler = fit_standardizer(prepared.train, keep_numeric)
+    vocab = {c: stats.vocabulary(c) for c in roles.nominal}
+    ohe = [col for c in roles.nominal for col in one_hot_columns(c, vocab[c])]
+    z = scaler.expressions()
 
     def _feats(df: DataFrame) -> DataFrame:
-        df = one_hot_encode(df, roles.nominal, cats, drop_input=False)
-        return scaler.transform(df, keep_numeric)
+        return df.select("*", *ohe).withColumns(z)
 
-    ohe_cols = [f"{c}_{v}" for c in roles.nominal for v in cats[c]]
+    ohe_cols = [f"{c}_{v}" for c in roles.nominal for v in vocab[c]]
     feature_cols = keep_numeric + keep_binary + ohe_cols
     return _feats(prepared.train), _feats(prepared.test), feature_cols
 

@@ -11,13 +11,16 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
+from nsl_kdd_spark import pipeline
 from nsl_kdd_spark.ml.ar import attribute_ratio
 from nsl_kdd_spark.ml.cluster import kmeans_assign, split_clusters
-from nsl_kdd_spark.ml.features import assemble, fit_standardizer
+from nsl_kdd_spark.ml.features import assemble
 from nsl_kdd_spark.pipeline import (
     NslConfig,
     build_features,
@@ -39,6 +42,10 @@ from workloads import _read_nsl, numpy_attribute_ratio  # noqa: E402
 
 N_TRAIN, N_TEST, SEED = 2000, 1000, 1
 CFG = NslConfig(kmeans_k=4, rf_trees=10, rf_depth=6)
+# Spark jobs prepare + build_features may submit: the constant-column
+# check and the one feature-fitting aggregation, 5 with AQE on (it
+# submits each shuffle stage as a job of its own)
+MAX_FIT_JOBS = 5
 
 # (tn, fp, fn, tp) per flow on these files
 KMEANS_CM = (394, 28, 17, 561)
@@ -199,38 +206,68 @@ def test_prepare_repairs_generated(spark, nsl_files):
 
 def _deterministic_stages(spark, train, test, conf: dict[str, str]) -> dict:
     """What the pipeline computes before any random forest, under the
-    session settings ``conf``: prepare row counts, attribute-ratio rows
-    and standardiser means and stds (plain double sums, as
-    ``build_features`` runs them, over every non-constant numeric
-    column), and the cluster split of a KMeans assignment (a short
-    KMeans: the split rule, not the fit, is under test). The shared
-    session's settings are restored afterwards."""
+    session settings ``conf``. ``stages``: prepare row counts, the
+    attribute-ratio rows, selections and standardiser that
+    ``build_features`` fits (taken from its calls to the ``pipeline``
+    names ``select_features`` and ``fit_standardizer``, which perfbench
+    wraps too), the feature columns, and the cluster split of a KMeans
+    assignment (a short KMeans: the split rule, not the fit, is under
+    test). ``fit_jobs``: the Spark jobs prepare + build_features
+    submitted. ``operator_ar``: the ``attribute_ratio`` operator's rows
+    on the same prepared frame. The shared session's settings are
+    restored afterwards."""
+    sc = spark.sparkContext
+    group = f"feature-fit-{uuid.uuid4().hex}"
+    seen: dict[str, list] = {"select_features": [], "fit_standardizer": []}
+
+    def spy(name):
+        fn = getattr(pipeline, name)
+
+        def call(*args):
+            out = fn(*args)
+            seen[name].append((args, out))
+            return out
+        return call
+
     old = {k: spark.conf.get(k) for k in conf}
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
-        prepared = prepare(spark, train, test)
+        sc.setJobGroup(group, "prepare + build_features")
+        try:
+            with mock.patch.multiple(pipeline, select_features=spy("select_features"),
+                                     fit_standardizer=spy("fit_standardizer")):
+                prepared = prepare(spark, train, test)
+                train_f, _, feature_cols = build_features(prepared, CFG)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        fit_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        (ar_rows, _), _ = seen["select_features"][0]
+        [(_, scaler)] = seen["fit_standardizer"]
         roles = nsl_kdd_roles()
-        numeric = [c for c in roles.numeric if c in prepared.train.columns]
-        binary = [c for c in roles.binary if c in prepared.train.columns]
-        ar = attribute_ratio(
-            prepared.train, numeric_cols=numeric, binary_cols=binary,
+        operator_ar = attribute_ratio(
+            prepared.train,
+            numeric_cols=[c for c in roles.numeric if c in prepared.train.columns],
+            binary_cols=[c for c in roles.binary if c in prepared.train.columns],
             label_col="labels5", exact_scale=None,
         ).collect()
-        scaler = fit_standardizer(prepared.train, numeric)
-        train_f, _, feature_cols = build_features(prepared, CFG)
         _, assigned = kmeans_assign(
             assemble(train_f, feature_cols), "raw_features", k=CFG.kmeans_k,
             init_steps=2, max_iter=5, seed=CFG.seed,
         )
         split = split_clusters(assigned, min_rows=CFG.min_cluster_rows)
-        return {
+        stages = {
             "rows": (prepared.train.count(), prepared.test.count()),
-            "ar": [tuple(r) for r in ar],
+            "ar": [tuple(r) for r in ar_rows],
+            "selected": [out for _, out in seen["select_features"]],
             "means": scaler.means,
             "stddevs": scaler.stddevs,
+            "feature_cols": feature_cols,
             "split": (split.mapping, split.modeled),
         }
+        return {"stages": stages, "fit_jobs": fit_jobs,
+                "operator_ar": [tuple(r) for r in operator_ar]}
     finally:
         spark.catalog.clearCache()
         for k, v in old.items():
@@ -247,21 +284,38 @@ def default_stages(spark, nsl_files):
 
 
 def test_features_match_numpy(default_stages, nsl_files):
-    """Attribute ratio and standardiser against a numpy/pandas
-    recomputation from the CSV."""
+    """Attribute ratio, selections and standardiser, as build_features
+    fits them, against a numpy/pandas recomputation from the CSV."""
     train = nsl_files[0]
-    got_ar = dict(default_stages["ar"])
+    stages = default_stages["stages"]
+    got_ar = dict(stages["ar"])
     want_ar, want_numeric = numpy_attribute_ratio(train)
     assert set(got_ar) == set(want_ar)
     for c, want in want_ar.items():
         assert got_ar[c] == pytest.approx(want, rel=1e-9, abs=1e-12), c
-    assert set(default_stages["means"]) == set(want_numeric)
+    assert stages["selected"] == [
+        [c for c, _ in stages["ar"] if want_ar[c] >= min_ar]
+        for min_ar in (CFG.min_ar_numeric, CFG.min_ar_binary)
+    ]
+    want_keep = [c for c in want_numeric if want_ar[c] >= CFG.min_ar_numeric]
+    assert want_keep and set(stages["means"]) == set(want_keep)
     frame = _read_nsl(train)
-    for c in want_numeric:
-        assert default_stages["means"][c] == pytest.approx(
+    for c in want_keep:
+        assert stages["means"][c] == pytest.approx(
             frame[c].mean(), rel=1e-9, abs=1e-12), c
-        assert default_stages["stddevs"][c] == pytest.approx(
+        assert stages["stddevs"][c] == pytest.approx(
             frame[c].std(ddof=1), rel=1e-9, abs=1e-12), c
+
+
+def _check_fit(got: dict) -> None:
+    """prepare + build_features stay within MAX_FIT_JOBS jobs, and the
+    pipeline's attribute-ratio rows are exactly the operator's."""
+    assert got["fit_jobs"] <= MAX_FIT_JOBS, got["fit_jobs"]
+    assert got["stages"]["ar"] == got["operator_ar"]
+
+
+def test_feature_fit_jobs_and_operator_parity(default_stages):
+    _check_fit(default_stages)
 
 
 @pytest.mark.parametrize("conf", [
@@ -273,4 +327,6 @@ def test_deterministic_stages_ignore_session_config(spark, nsl_files, default_st
     shuffle partitions and AQE on vs off. RF output is left out on
     purpose: its bootstrap samples follow the input's partitioning, so
     scores may legitimately differ between configurations."""
-    assert _deterministic_stages(spark, *nsl_files[:2], conf) == default_stages
+    got = _deterministic_stages(spark, *nsl_files[:2], conf)
+    _check_fit(got)
+    assert got["stages"] == default_stages["stages"]

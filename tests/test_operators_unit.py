@@ -58,6 +58,18 @@ def test_drop_constant_columns(spark):
     assert out.columns == ["a"]
 
 
+def test_drop_constant_columns_nulls_and_nan(spark):
+    """The check is exact and null-safe: all nulls, or nulls plus one
+    value, is constant; a number plus NaN is two values."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(None, None, 1.0), (None, 3.0, nan), (None, 3.0, 1.0)],
+        "all_null double, null_and_one double, one_and_nan double",
+    )
+    out = relational.drop_constant_columns(df, df.columns)
+    assert out.columns == ["one_and_nan"]
+
+
 def test_deterministic_id_row_number(spark):
     df = spark.createDataFrame([("c",), ("a",), ("b",)], "k string")
     out = relational.with_deterministic_id(df, "id", order_by=["k"])
